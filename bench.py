@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO)
 
 # Headline set: the five TPC-H-shaped plans + one per pipeline family
 # (voting two-phase agg, self-join agreement, dedup, quality, ANN, windows,
@@ -388,6 +389,13 @@ def _heap_mb(spark) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # Spark's Python workers start from a fresh interpreter that does not
+    # inherit this process's sys.path: queries whose UDFs import this
+    # package need the repo root on PYTHONPATH before the JVM (and so the
+    # workers) start, or a run from another directory fails them.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+    )
 
     import __spark_entry__ as E
 
@@ -528,9 +536,7 @@ def main() -> None:
     # official record came back `parsed: null`. Keep the stdout line
     # compact (top-10 slowest only) and route the complete per-query
     # detail to a side file + stderr, where it stays diffable.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-    )
+    detail_path = os.path.join(_REPO, "bench_detail.json")
     detail = {
         "metric": "headline_queries_total",
         "value": total,

@@ -175,6 +175,18 @@ def _manifest_dir(path: str) -> str:
     return os.path.join(path, MANIFEST_DIR)
 
 
+def _remove_quietly(fs, rel: str, names) -> None:
+    """Best-effort removal of files no manifest references — a batch
+    staged for a commit that lost its race or turned out to be a replay,
+    a lost commit's fresh segments or sidecar. Vacuum collects whatever
+    survives, so a failed remove is skipped, never raised."""
+    for n in names:
+        try:
+            fs.remove(os.path.join(rel, n))
+        except OSError:
+            pass
+
+
 def _versions(path: str) -> list[int]:
     fs, path = get_fs(path)
     d = _manifest_dir(path)
@@ -373,81 +385,71 @@ def compact_segments(path: str) -> int:
     want = -(-len(m["files"]) // SEGMENT_TARGET_FILES)  # ceil
     if len(segs) <= max(want, 1):
         return 0  # already optimally chunked: no version churn
-    _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"), deletes=m.get("deletes"),
-        rows=m.get("rows"), seq=m.get("seq"), blooms=m.get("blooms"),
-        partitions=m.get("partitions"), specs=m.get("specs"),
-        current_spec=m.get("current_spec"), colmap=m.get("colmap"),
-        generated=m.get("generated") or {}, defaults=m.get("defaults"),
-        identity=m.get("identity"), dropped=m.get("dropped"),
-        props=m.get("props"),
-        row_base=m.get("row_base"), row_next=m.get("row_next"),
-        op="OPTIMIZE",
-        reseg=True,
-    )
+    _commit(path, m, op="OPTIMIZE", reseg=True)
     m2 = read_manifest(path)
     return len(segs) - len(m2.get("segments") or [])
 
 
+# Manifest fields a commit may change; every one the caller leaves out
+# carries forward from the base snapshot.
+_COMMIT_FIELDS = frozenset({
+    "txns", "schema", "stats", "stat_cols", "constraints", "rows",
+    "deletes", "seq", "blooms", "partitions", "specs", "current_spec",
+    "colmap", "generated", "defaults", "identity", "dropped", "props",
+    "row_base", "row_next",
+})
+
+
 def _commit(
     path: str,
-    files: list[str],
-    expected_version: int,
-    txns: dict | None = None,
-    schema: list | None = None,
-    stats: dict | None = None,
-    stat_cols: "list | None" = None,
-    constraints: dict | None = None,
-    rows: dict | None = None,
-    deletes: "list | None" = None,
-    seq: dict | None = None,
-    blooms: dict | None = None,
-    partitions: dict | None = None,
-    specs: "list | None" = None,
-    current_spec: int | None = None,
-    colmap: dict | None = None,
-    generated: dict | None = None,
-    defaults: dict | None = None,
-    identity: dict | None = None,
-    dropped: "list | None" = None,
-    props: dict | None = None,
+    m: dict,
+    files: "list[str] | None" = None,
     op: str | None = None,
     cdf_files: "list | None" = None,
-    row_base: dict | None = None,
-    row_next: int | None = None,
     reseg: bool = False,
+    **changed,
 ) -> int:
-    """Commit ``files`` as version ``expected_version + 1`` via
-    create-exclusive; raises :class:`CommitConflict` if someone else got
-    there first. ``txns`` carries the idempotent-writer watermarks
-    (app_id -> last applied batch id — Delta's ``txn`` action in minimal
-    form); callers pass the previous manifest's dict updated with their
-    own entry. Returns the committed version.
+    """Commit the version after snapshot ``m`` via create-exclusive;
+    raises :class:`CommitConflict` if someone else committed
+    ``m["version"] + 1`` first. ``files`` is the new file list (default:
+    ``m``'s). Returns the committed version.
 
-    ``seq`` is the per-file sequence map (version at which each data
-    file was ADDED — Iceberg's sequence numbers in minimal form): by
-    default it carries forward from the previous manifest, with files it
-    doesn't know stamped ``new_v``. Equality-delete entries (``deletes``)
-    apply only to data files with a LOWER sequence, so a later
-    append/upsert re-inserting a deleted key is not suppressed and a
-    rewrite (which applies pending deletes while reading) cannot
-    resurrect rows. ``restore`` passes the target's map through verbatim
-    so time-travel semantics stay exact."""
-    new_v = expected_version + 1
-    prev_doc: dict = {}
-    if expected_version >= 1:
-        try:
-            prev_doc = read_manifest(path, expected_version)
-        except FileNotFoundError:
-            prev_doc = {}
+    Every field of :data:`_COMMIT_FIELDS` the caller does not pass in
+    ``changed`` carries forward from ``m``; a passed value — ``None``,
+    ``{}`` and ``[]`` included — replaces it. The per-file maps follow
+    the file list instead of carrying verbatim: surviving files keep
+    their ``seq``/``stats``/``rows``/``blooms``/``partitions``/
+    ``row_base`` entries, and files new in this commit get ``seq`` =
+    the new version (Iceberg's sequence numbers in minimal form —
+    equality-delete entries apply only to files with a LOWER sequence,
+    so a later re-insert of a deleted key is not suppressed), footer
+    stats over ``stat_cols`` and footer row counts; they have no bloom
+    until :func:`ensure_blooms` backfills one. A passed ``partitions``
+    map holds the new files' values and merges over the survivors'.
+    ``restore`` and ``clone_table`` pass whole maps, which replace the
+    derived ones (a ``None`` ``seq`` or ``row_base`` is derived as if not
+    passed). ``txns`` holds the idempotent-writer watermarks (app_id ->
+    last applied batch id — Delta's ``txn`` action in minimal form).
+    ``cdf_files`` (this commit's change files) and ``op`` describe one
+    transition and never carry. Table-creating commits pass the empty
+    base ``{"version": 0, "files": []}``."""
+    unknown = set(changed) - _COMMIT_FIELDS
+    if unknown:
+        raise TypeError(f"_commit got unknown manifest fields {sorted(unknown)}")
+
+    def val(k):
+        return changed[k] if k in changed else m.get(k)
+
+    new_v = m["version"] + 1
+    prev_files = m.get("files") or []
+    files = list(prev_files if files is None else files)
+    fset = set(files)
+    new = sorted(fset - set(prev_files))
     # Writer protocol gate: refuse to commit against a table written by
     # a future format whose WRITE-TIME invariants this build cannot
     # enforce — committing blind would corrupt them silently. Reads are
     # never blocked by the writer version (only by the reader gate).
-    prev_writer = (prev_doc.get("protocol") or {}).get("writer", 1)
+    prev_writer = (m.get("protocol") or {}).get("writer", 1)
     if prev_writer > SUPPORTED_WRITER_VERSION:
         raise RuntimeError(
             f"{path} requires manifest writer version {prev_writer}; this "
@@ -455,81 +457,63 @@ def _commit(
             "writing (a blind commit would corrupt invariants this build "
             "does not know how to enforce)"
         )
-    if seq is None:
-        prev_seq = prev_doc.get("seq") or {}
-        seq = {f: prev_seq.get(f, new_v) for f in files}
-    if blooms is None:
-        # Carry per-file bloom filters forward for surviving files (same
-        # rule as seq): data files are immutable, so a bloom computed at
-        # version v stays valid until the file leaves the table. Files
-        # new in this commit simply have no entry yet — readers treat
-        # bloom-less files conservatively, and ensure_blooms backfills.
-        prev_bl = prev_doc.get("blooms") or {}
-        blooms = {f: prev_bl[f] for f in files if f in prev_bl}
-    # Partition metadata (Iceberg's partition specs in minimal form):
-    # specs / current_spec carry forward verbatim unless the caller is
-    # evolving them; per-file partition VALUES follow the immutable-file
-    # rule (carried for survivors, merged with the caller's entries for
-    # new files). A file with no entry — pre-evolution data, or a rewrite
-    # output mixing partitions — is simply conservative at prune time.
-    if specs is None:
-        specs = prev_doc.get("specs")
-    if current_spec is None:
-        current_spec = prev_doc.get("current_spec")
-    if colmap is None:
-        # Logical -> physical column mapping (Delta column mapping in
-        # minimal form): carried verbatim — renames are metadata, the
-        # physical name in every data file is immutable.
-        colmap = prev_doc.get("colmap")
-    if generated is None:
-        generated = prev_doc.get("generated")
-    if defaults is None:
-        # Column defaults (Iceberg v3 initial/write defaults in minimal
-        # form) carry forward verbatim; explicit {} clears them
-        # (restore's schema-unit rule, same as generated/colmap).
-        defaults = prev_doc.get("defaults")
-    if dropped is None:
-        # The dropped-physical-names ledger is MONOTONE: it grows on
-        # every DROP COLUMN and is never cleared — not even by restore —
-        # because its sole job is to stop a later ADD COLUMN from
-        # re-binding a physical name that still holds old data in some
-        # retained file (worst case of keeping an entry too long is a
-        # needlessly fresh physical name; losing one is a silent
-        # read-of-stale-data).
-        dropped = prev_doc.get("dropped")
-    if props is None:
-        # Table properties (delta.enableChangeDataFeed analog) carry
-        # forward verbatim; explicit {} clears them (restore's unit rule).
-        props = prev_doc.get("props")
-    prev_parts = prev_doc.get("partitions") or {}
-    merged_parts = {f: prev_parts[f] for f in files if f in prev_parts}
-    if partitions:
-        merged_parts.update(
-            {f: p for f, p in partitions.items() if f in set(files)}
-        )
     fs, path = get_fs(path)
+
+    def survivors(k):
+        prev = m.get(k) or {}
+        return {f: prev[f] for f in files if f in prev}
+
+    seq = changed.get("seq")
+    if seq is None:
+        prev_seq = m.get("seq") or {}
+        seq = {f: prev_seq.get(f, new_v) for f in files}
+    rows = changed["rows"] if "rows" in changed else {
+        **survivors("rows"),
+        **{
+            f: fs.parquet_file(os.path.join(path, f)).metadata.num_rows
+            for f in new
+        },
+    }
+    stat_cols = val("stat_cols")
+    if "stats" in changed:
+        stats = changed["stats"]
+    elif stat_cols:
+        stats = {**survivors("stats"), **_file_stats(fs, path, new, stat_cols)}
+    else:
+        stats = None if m.get("stats") is None else survivors("stats")
+    # Data files are immutable, so a bloom computed at version v stays
+    # valid until its file leaves the table; bloom-less files are simply
+    # conservative at prune time.
+    blooms = changed["blooms"] if "blooms" in changed else survivors("blooms")
+    merged_parts = survivors("partitions")
+    merged_parts.update(
+        {f: p for f, p in (changed.get("partitions") or {}).items() if f in fset}
+    )
+    props = val("props")
+
+    def n_rows(f):
+        n = (rows or {}).get(f)
+        if n is None:
+            n = fs.parquet_file(os.path.join(path, f)).metadata.num_rows
+        return int(n)
+
     # Row tracking (Delta row lineage in minimal form): every file gets a
     # BASE row id; fresh files allocate [row_next, row_next + rows) —
     # metadata-only, appends pay zero storage (ids are base + row index
     # at read time); rewrite outputs materialize survivors' ids as a
     # physical __row_id column that wins per row. restore() passes the
     # target's map verbatim (ids time-travel exactly).
+    row_base = row_next = None
     if (props or {}).get("row_tracking"):
+        row_base = changed.get("row_base")
         if row_base is None:
-            prev_base = prev_doc.get("row_base") or {}
-            nxt = int(prev_doc.get("row_next") or 0)
-            row_base = {f: prev_base[f] for f in files if f in prev_base}
-            for f in sorted(set(files) - set(row_base)):
-                n_rows = (rows or {}).get(f)
-                if n_rows is None:
-                    n_rows = fs.parquet_file(
-                        os.path.join(path, f)
-                    ).metadata.num_rows
-                row_base[f] = nxt
-                nxt += int(n_rows)
-            row_next = nxt
-    else:
-        row_base = row_next = None
+            row_base = survivors("row_base")
+            row_next = int(m.get("row_next") or 0)
+            for f in sorted(fset - set(row_base)):
+                row_base[f] = row_next
+                row_next += n_rows(f)
+        else:
+            row_next = changed.get("row_next")
     # Identity columns (Delta GENERATED ALWAYS AS IDENTITY in minimal
     # form) allocate per-file ORDINAL bases exactly like row tracking:
     # value = start + step * (base + row index) at read time, so appends
@@ -538,27 +522,31 @@ def _commit(
     # Rewrite outputs carry the column physically (it is in the schema),
     # which wins over the computed value per file; their base entries are
     # allocated but unused — gaps, which identity semantics permit.
-    if identity is None:
-        identity = prev_doc.get("identity")
+    identity = val("identity")
     if identity:
         identity = {c: dict(spec) for c, spec in identity.items()}
         for c, spec in identity.items():
             base = {
-                f: b
-                for f, b in (spec.get("base") or {}).items()
-                if f in set(files)
+                f: b for f, b in (spec.get("base") or {}).items() if f in fset
             }
             nxt = int(spec.get("next") or 0)
-            for f in sorted(set(files) - set(base)):
-                n_rows = (rows or {}).get(f)
-                if n_rows is None:
-                    n_rows = fs.parquet_file(
-                        os.path.join(path, f)
-                    ).metadata.num_rows
+            for f in sorted(fset - set(base)):
                 base[f] = nxt
-                nxt += int(n_rows)
+                nxt += n_rows(f)
             spec["base"] = base
             spec["next"] = nxt
+    schema, constraints, deletes = (
+        val("schema"), val("constraints"), val("deletes"),
+    )
+    specs, colmap, generated = val("specs"), val("colmap"), val("generated")
+    # Column defaults (Iceberg v3 initial/write defaults), colmap
+    # (renames are metadata; physical names in data files are immutable),
+    # generated expressions and props carry forward verbatim; restore
+    # passes {} to clear them (a schema-unit rule). The dropped-physical-
+    # names ledger is MONOTONE: restore never passes it, because its
+    # sole job is to stop a later ADD COLUMN from re-binding a physical
+    # name that still holds old data in some retained file.
+    defaults, dropped = val("defaults"), val("dropped")
     d = _manifest_dir(path)
     fs.makedirs(d)
     # In-commit timestamp (Delta ICT in minimal form): the commit time
@@ -571,9 +559,9 @@ def _commit(
     doc = {
         "version": new_v,
         "files": sorted(files),
-        "txns": txns or {},
+        "txns": val("txns") or {},
         "seq": {f: seq[f] for f in sorted(seq)},
-        "ts": max(_time.time(), float(prev_doc.get("ts") or 0.0)),
+        "ts": max(_time.time(), float(m.get("ts") or 0.0)),
     }
     if op:
         # Operation kind (Delta's DESCRIBE HISTORY `operation` column):
@@ -595,7 +583,7 @@ def _commit(
         doc["blooms"] = {f: blooms[f] for f in sorted(blooms)}
     if specs is not None:
         doc["specs"] = [list(s) for s in specs]
-        doc["current_spec"] = current_spec
+        doc["current_spec"] = val("current_spec")
     if colmap:
         doc["colmap"] = {k: colmap[k] for k in sorted(colmap)}
     if generated:
@@ -672,9 +660,7 @@ def _commit(
         # reader sees no file list at all: a hard miss, gated anyway).
         # ``reseg`` (compact_segments) ignores the previous segmentation
         # so fragmented name lists re-chunk to target size.
-        doc, new_segs = _segmentize(
-            fs, path, doc, {} if reseg else prev_doc
-        )
+        doc, new_segs = _segmentize(fs, path, doc, {} if reseg else m)
         doc["protocol"]["reader"] = max(reader, 3)
     body = _seal_doc(doc)  # embedded crc: read-side torn-blob detection
     target = os.path.join(d, f"{new_v:08d}.json")
@@ -687,11 +673,7 @@ def _commit(
     except FileExistsError as e:
         # Lost the race: this attempt's fresh segments are referenced by
         # nothing — drop them now (vacuum would get them, but why wait).
-        for n in new_segs:
-            try:
-                fs.remove(os.path.join(path, n))
-            except Exception:
-                pass
+        _remove_quietly(fs, path, new_segs)
         raise CommitConflict(
             f"version {new_v} already committed at {path}; re-plan"
         ) from e
@@ -734,11 +716,9 @@ def create_table(
     fs, rel = get_fs(path)
     fs.makedirs(rel)
     return _commit(
-        path, [], 0,
+        path, {"version": 0, "files": []},
         schema=schema,
         stat_cols=stat_cols,
-        stats={} if stat_cols else None,
-        rows={},
         specs=[list(partition_spec)] if partition_spec else None,
         current_spec=0 if partition_spec else None,
         props=props,
@@ -753,19 +733,17 @@ def manifest_init(path: str, stat_cols: "list | None" = None) -> int:
     ``stat_cols`` turns on manifest-level file statistics: per-file
     [min, max] for those columns are computed from the footers ONCE here
     (and per-commit for new files) and stored in the manifest, so
-    :func:`scan_manifest_table` plans file-skipping scans from metadata
+    :func:`scan_auto` plans file-skipping scans from metadata
     alone — at 100 TB the difference between planning from one small JSON
     and opening a million footers."""
     if _versions(path):
         return current_version(path)
     fs, rel = get_fs(path)
     files = sorted(f for f in fs.listdir(rel) if f.endswith(".parquet"))
-    stats = _file_stats(fs, rel, files, stat_cols) if stat_cols else None
     return _commit(
-        path, files, 0,
+        path, {"version": 0, "files": []}, files,
         schema=_table_schema_list(path, files),
-        stats=stats, stat_cols=stat_cols,
-        rows=_updated_rows({}, fs, rel, files),
+        stat_cols=stat_cols,
         op="CREATE TABLE",
     )
 
@@ -862,13 +840,11 @@ def convert_to_manifest(
     have = {n for n, _t in schema}
     schema += [[c, ptypes[c]] for c in pcols if c not in have]
     fill = [c for c in pcols if c not in have]
-    stats = _file_stats(fs, rel, files, stat_cols) if stat_cols else None
     return _commit(
-        path, files, 0,
+        path, {"version": 0, "files": []}, files,
         schema=schema,
-        stats=stats, stat_cols=stat_cols,
-        rows=_updated_rows({}, fs, rel, files),
-        partitions=parts or None,
+        stat_cols=stat_cols,
+        partitions=parts,
         specs=[list(pcols)] if pcols else None,
         current_spec=0 if pcols else None,
         props={"pfill": ",".join(fill)} if fill else None,
@@ -887,16 +863,28 @@ def _df_schema_list(df: DataFrame) -> list:
 
 def _table_schema_list(path: str, files: list[str]) -> list:
     """Schema of an adopted plain-Parquet table, from one file's footer
-    (Spark wrote all parts with one schema)."""
+    (Spark wrote all parts with one schema), typed the way Spark reads
+    the file back: a timestamp NOT adjusted to UTC is ``timestamp_ntz``,
+    an INT96 or UTC-adjusted one is ``timestamp``. Arrow shows INT96 and
+    not-adjusted timestamps alike (no time zone), so the physical type
+    tells them apart — a wrong type here refuses the first append of
+    the very data the table was adopted from."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     if not files:
         return []
     fs, rel = get_fs(path)
-    arrow = fs.parquet_file(os.path.join(rel, files[0])).schema_arrow
+    pf = fs.parquet_file(os.path.join(rel, files[0]))
+    int96 = {
+        pf.schema.column(i).path
+        for i in range(len(pf.schema))
+        if pf.schema.column(i).physical_type == "INT96"
+    }
     return [
-        [f.name, f.dataType.simpleString()]
-        for f in from_arrow_schema(arrow).fields
+        [f.name, "timestamp" if f.name in int96 else f.dataType.simpleString()]
+        for f in from_arrow_schema(
+            pf.schema_arrow, prefer_timestamp_ntz=True
+        ).fields
     ]
 
 
@@ -980,6 +968,14 @@ def load_manifest_table(
             f"row tracking is not enabled on {path}; call "
             "enable_row_tracking() first"
         )
+    return _snapshot_df(spark, path, m, with_row_ids)
+
+
+def _snapshot_df(
+    spark: SparkSession, path: str, m: dict, with_row_ids: bool = False
+) -> DataFrame:
+    """The whole of snapshot ``m`` as a DataFrame (the body of
+    :func:`load_manifest_table` for a snapshot already read)."""
     schema = m.get("schema")
     if not m["files"]:
         if schema:
@@ -1351,7 +1347,7 @@ def _file_stats(fs, rel: str, names: list, stat_cols: list) -> dict:
     long string stats, but per the format contract a truncated min is a
     prefix (<= the true min) and a truncated max is incremented past the
     true max — both directions stay conservative for the overlap test in
-    :func:`prune_files`, so truncation can only keep an extra file,
+    :func:`prune_files_multi`, so truncation can only keep an extra file,
     never skip a matching one."""
     out: dict = {}
     for name in names:
@@ -1405,57 +1401,18 @@ def _file_stats(fs, rel: str, names: list, stat_cols: list) -> dict:
     return out
 
 
-def _updated_stats(m: dict, fs, rel: str, new_names: list, victims=()):
-    """(stats, stat_cols) for the next commit: previous stats minus the
-    victim files, plus freshly computed stats for the new files. (None,
-    None) when the table doesn't track stats."""
-    stat_cols = m.get("stat_cols")
-    if not stat_cols:
-        return None, None
-    stats = {
-        f: s for f, s in (m.get("stats") or {}).items() if f not in set(victims)
-    }
-    stats.update(_file_stats(fs, rel, new_names, stat_cols))
-    return stats, stat_cols
-
-
-def prune_files(
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> "tuple[list[str], int]":
-    """(files that may contain rows with ``lo <= col <= hi``, total files)
-    for the given version — decided ENTIRELY from the manifest's stored
-    stats (zero file opens, zero data IO: Iceberg/Delta's metadata-only
-    planning). A file with no stored stats for ``col`` is conservatively
-    kept; skipping is only ever an optimization, never a filter."""
-    m = read_manifest(path, version)
-    stats = m.get("stats") or {}
-    pcol = _physical_col(m, col)
-    kept = []
-    for f in m["files"]:
-        s = (stats.get(f) or {}).get(pcol)
-        if s is None or s[0] is None:
-            kept.append(f)  # unknown -> cannot prune
-        elif not (hi < s[0] or lo > s[1]):
-            kept.append(f)
-    return kept, len(m["files"])
-
-
 def prune_files_multi(
-    path: str,
-    predicates: "dict[str, tuple]",
-    version: int | None = None,
+    m: dict, predicates: "dict[str, tuple]"
 ) -> "tuple[list[str], int]":
-    """:func:`prune_files` for a conjunction: keep a file only if its
-    stored [min, max] overlaps EVERY ``col: (lo, hi)`` predicate — the
-    box query a Z-ordered layout exists for (each Z-ordered file is a
-    narrow bounding box in every listed dimension, so a small box prunes
-    on all of them at once). Unknown stats on ANY column keep the file
-    (conservative per-column, like the single-column path)."""
-    m = read_manifest(path, version)
+    """(files of snapshot ``m`` whose stored [min, max] overlaps EVERY
+    ``col: (lo, hi)`` predicate, total files) — decided ENTIRELY from the
+    manifest's stored stats (zero file opens, zero data IO:
+    Iceberg/Delta's metadata-only planning). One predicate is a range
+    scan; several are the box query a Z-ordered layout exists for (each
+    Z-ordered file is a narrow bounding box in every listed dimension,
+    so a small box prunes on all of them at once). Unknown stats on a
+    column keep the file for that column: skipping is only ever an
+    optimization, never a filter."""
     stats = m.get("stats") or {}
     kept = []
     for f in m["files"]:
@@ -1472,55 +1429,8 @@ def prune_files_multi(
     return kept, len(m["files"])
 
 
-def scan_manifest_table_box(
-    spark: SparkSession,
-    path: str,
-    predicates: "dict[str, tuple]",
-    version: int | None = None,
-) -> DataFrame:
-    """Box scan with multi-dimension manifest-stats file skipping: only
-    files whose stored [min, max] overlaps EVERY predicate enter the
-    plan, and the exact BETWEEN conjunction still applies. Equivalent to
-    ``load_manifest_table(...).filter(AND of betweens)`` by construction
-    — on an ``optimize_zorder``-ed layout every listed dimension prunes
-    simultaneously."""
-    files, _total = prune_files_multi(path, predicates, version)
-    pred = F.lit(True)
-    for col, (lo, hi) in predicates.items():
-        pred = pred & F.col(col).between(F.lit(lo), F.lit(hi))
-    if not files:
-        return load_manifest_table(spark, path, version).filter(pred).limit(0)
-    m = read_manifest(path, version)
-    return _with_deletes(spark, path, m, files).filter(pred)
-
-
-def scan_manifest_table(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Range scan with manifest-stats file skipping: only files whose
-    stored [min, max] on ``col`` overlaps [lo, hi] enter the plan, and
-    the exact BETWEEN predicate is still applied (stats skip whole
-    files; Parquet row-group pushdown and the filter handle the rest).
-    Equivalent to ``load_manifest_table(...).filter(between)`` by
-    construction — the oracle for the catalog query."""
-    files, _total = prune_files(path, col, lo, hi, version)
-    pred = F.col(col).between(F.lit(lo), F.lit(hi))
-    if not files:
-        return load_manifest_table(spark, path, version).filter(pred).limit(0)
-    m = read_manifest(path, version)
-    return _with_deletes(spark, path, m, files).filter(pred)
-
-
 def prune_files_null(
-    path: str,
-    col: str,
-    want_null: bool,
-    version: int | None = None,
+    m: dict, col: str, want_null: bool
 ) -> "tuple[list[str], int]":
     """(files that may contain matching rows, total files) for an
     ``IS NULL`` (``want_null=True``) or ``IS NOT NULL`` predicate on
@@ -1531,7 +1441,6 @@ def prune_files_null(
     min/max at all, which range stats are blind to) can't satisfy
     IS NOT NULL. Files without a tracked null count (pre-round-6
     commits, untracked columns) are conservatively kept."""
-    m = read_manifest(path, version)
     pcol = _physical_col(m, col)
     stats = m.get("stats") or {}
     rows = m.get("rows") or {}
@@ -1549,40 +1458,6 @@ def prune_files_null(
             continue
         kept.append(f)
     return kept, len(m["files"])
-
-
-def scan_manifest_table_null(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    want_null: bool,
-    version: int | None = None,
-) -> DataFrame:
-    """Null-predicate scan with file skipping from stored null counts;
-    the exact predicate still applies (stats skip whole files). Equals
-    ``load_manifest_table(...).filter(col IS [NOT] NULL)`` by
-    construction."""
-    files, _total = prune_files_null(path, col, want_null, version)
-    pred = F.col(col).isNull() if want_null else F.col(col).isNotNull()
-    if not files:
-        return load_manifest_table(spark, path, version).filter(pred).limit(0)
-    m = read_manifest(path, version)
-    return _with_deletes(spark, path, m, files).filter(pred)
-
-
-def _updated_rows(m: dict, fs, rel: str, new_names: list, victims=()):
-    """Per-file row counts for the next commit: previous counts minus
-    victims, plus footer counts for the new files — the bookkeeping
-    behind :func:`history` (Delta's DESCRIBE HISTORY in minimal form).
-    Footers of new files are already open for stats; a row count is one
-    more metadata field, zero data IO."""
-    rows = {
-        f: n for f, n in (m.get("rows") or {}).items() if f not in set(victims)
-    }
-    for name in new_names:
-        if name not in rows:
-            rows[name] = fs.parquet_file(os.path.join(rel, name)).metadata.num_rows
-    return rows
 
 
 def files_table(
@@ -1829,16 +1704,7 @@ def set_table_properties(path: str, **props) -> int:
             merged[k] = v
     if merged == (m.get("props") or {}):
         return m["version"]  # no-op: no version churn
-    return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        props=merged,
-        op="SET TBLPROPERTIES",
-    )
+    return _commit(path, m, props=merged, op="SET TBLPROPERTIES")
 
 
 def enable_cdf(path: str) -> int:
@@ -1862,15 +1728,7 @@ def enable_cdf(path: str) -> int:
     if props.get("cdf"):
         return m["version"]
     props["cdf"] = True
-    return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"), rows=m.get("rows"),
-        props=props, cdf_files=[],
-        op="SET TBLPROPERTIES",
-    )
+    return _commit(path, m, props=props, cdf_files=[], op="SET TBLPROPERTIES")
 
 
 def enable_row_tracking(path: str) -> int:
@@ -1889,15 +1747,7 @@ def enable_row_tracking(path: str) -> int:
     if props.get("row_tracking"):
         return m["version"]
     props["row_tracking"] = True
-    return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"), rows=m.get("rows"),
-        props=props,
-        op="SET TBLPROPERTIES",
-    )
+    return _commit(path, m, props=props, op="SET TBLPROPERTIES")
 
 
 def _materialize_ids(df: DataFrame) -> DataFrame:
@@ -2142,23 +1992,13 @@ def append(
                 # Replay surfaced by the conflicting commit: our staged
                 # files are unreferenced; drop them now rather than
                 # leaving vacuum garbage.
-                for n in new_names:
-                    try:
-                        fs.remove(os.path.join(rel, n))
-                    except Exception:
-                        pass
+                _remove_quietly(fs, rel, new_names)
                 return m["version"]
             txns[app_id] = batch_id
-        stats, stat_cols = _updated_stats(m, fs, rel, new_names)
         try:
             return _commit(
-                path, m["files"] + new_names, m["version"], txns=txns,
-                schema=schema, stats=stats, stat_cols=stat_cols,
-                constraints=m.get("constraints"),
-                deletes=m.get("deletes"),
-                rows=_updated_rows(m, fs, rel, new_names),
-                partitions=new_parts,
-                op="WRITE",
+                path, m, m["files"] + new_names, txns=txns, schema=schema,
+                partitions=new_parts, op="WRITE",
             )
         except CommitConflict:
             if attempt == max_commit_retries:
@@ -2283,13 +2123,7 @@ def set_partition_spec(path: str, cols: "list[str]") -> int:
         specs.append(list(cols))
         spec_id = len(specs) - 1
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"), deletes=m.get("deletes"),
-        seq=m.get("seq"), rows=m.get("rows"),
-        specs=specs, current_spec=spec_id,
-        op="ALTER PARTITION SPEC",
+        path, m, specs=specs, current_spec=spec_id, op="ALTER PARTITION SPEC",
     )
 
 
@@ -2372,9 +2206,7 @@ def _stage_partitioned(
 
 
 def prune_files_partition(
-    path: str,
-    eq: "dict[str, object]",
-    version: int | None = None,
+    m: dict, eq: "dict[str, object]"
 ) -> "tuple[list[str], int]":
     """(files that may contain rows where every ``col = value`` holds,
     total files) — decided from the manifest's recorded partition values
@@ -2384,9 +2216,8 @@ def prune_files_partition(
     predicate value to its only possible token at plan time. A file with
     no recorded value involving the column (pre-evolution data, rewrite
     outputs) is conservatively kept; a token mismatch PROVABLY excludes
-    every row in the file. Composes with :func:`prune_files` stats for
-    the leftovers."""
-    m = read_manifest(path, version)
+    every row in the file. Composes with :func:`prune_files_multi`
+    stats for the leftovers."""
     parts = m.get("partitions") or {}
     kept = []
     for f in m["files"]:
@@ -2403,11 +2234,7 @@ def prune_files_partition(
 
 
 def prune_files_partition_range(
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
+    m: dict, col: str, lo, hi
 ) -> "tuple[list[str], int]":
     """(files that may contain rows with ``lo <= col <= hi``, total) from
     recorded partition values — the RANGE complement of
@@ -2420,10 +2247,8 @@ def prune_files_partition_range(
     entries never range-prune (conservative keep — same contract as
     every pruning path here: skipping is an optimization, not a
     filter)."""
-    m = read_manifest(path, version)
     parts = m.get("partitions") or {}
     kept = []
-    lo_s, hi_s = str(lo), str(hi)
     for f in m["files"]:
         ok = True
         for entry, token in (parts.get(f) or {}).items():
@@ -2455,47 +2280,6 @@ def prune_files_partition_range(
         if ok:
             kept.append(f)
     return kept, len(m["files"])
-
-
-def scan_manifest_table_partition_range(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Range scan with partition-transform pruning: only files whose
-    recorded day/truncate/identity token can overlap [lo, hi] enter the
-    plan; the exact BETWEEN still applies. Equivalent to
-    ``load_manifest_table(...).filter(between)`` by construction."""
-    files, _total = prune_files_partition_range(path, col, lo, hi, version)
-    pred = F.col(col).between(F.lit(lo), F.lit(hi))
-    if not files:
-        return load_manifest_table(spark, path, version).filter(pred).limit(0)
-    m = read_manifest(path, version)
-    return _with_deletes(spark, path, m, files).filter(pred)
-
-
-def scan_manifest_table_partition(
-    spark: SparkSession,
-    path: str,
-    eq: "dict[str, object]",
-    version: int | None = None,
-) -> DataFrame:
-    """Equality scan with partition pruning: only files whose recorded
-    partition values can match enter the plan; the exact predicate still
-    applies (pre-evolution files carry no values and scan fully).
-    Equivalent to ``load_manifest_table(...).filter(AND of equalities)``
-    by construction."""
-    files, _total = prune_files_partition(path, eq, version)
-    pred = F.lit(True)
-    for col, val in eq.items():
-        pred = pred & (F.col(col) == F.lit(val))
-    if not files:
-        return load_manifest_table(spark, path, version).filter(pred).limit(0)
-    m = read_manifest(path, version)
-    return _with_deletes(spark, path, m, files).filter(pred)
 
 
 def add_column(
@@ -2530,9 +2314,8 @@ def add_column(
         )
     if any(n == name for n, _ in schema):
         raise SchemaMismatch(f"column {name!r} already exists")
-    defaults = None
+    defaults = dict(m.get("defaults") or {})
     if initial_default is not None or write_default is not None:
-        defaults = dict(m.get("defaults") or {})
         defaults[name] = {
             "initial": initial_default,
             "write": (
@@ -2540,23 +2323,15 @@ def add_column(
             ),
             "since": m["version"] + 1,
         }
-    colmap = None
+    colmap = dict(m.get("colmap") or {})
     fresh = _fresh_physical(m, name)
     if fresh:
         # Re-adding a previously dropped name: bind a fresh physical
         # name so old files' retained bytes can never read back.
-        colmap = dict(m.get("colmap") or {})
         colmap[name] = fresh
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=schema + [[name, dtype]],
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        defaults=defaults,
-        colmap=colmap,
-        op="ADD COLUMN",
+        path, m, schema=schema + [[name, dtype]], defaults=defaults,
+        colmap=colmap, op="ADD COLUMN",
     )
 
 
@@ -2591,21 +2366,13 @@ def add_identity_column(
     identity = {c: dict(s) for c, s in (m.get("identity") or {}).items()}
     identity[name] = {"start": int(start), "step": int(step), "base": {},
                       "next": 0}
-    colmap = None
+    colmap = dict(m.get("colmap") or {})
     fresh = _fresh_physical(m, name)
     if fresh:
-        colmap = dict(m.get("colmap") or {})
         colmap[name] = fresh
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=schema + [[name, "bigint"]],
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        identity=identity,
-        colmap=colmap,
-        op="ADD COLUMN",
+        path, m, schema=schema + [[name, "bigint"]], identity=identity,
+        colmap=colmap, op="ADD COLUMN",
     )
 
 
@@ -2653,21 +2420,13 @@ def add_generated_column(
         ) from e
     generated = dict(m.get("generated") or {})
     generated[name] = expr
-    colmap = None
+    colmap = dict(m.get("colmap") or {})
     fresh = _fresh_physical(m, name)
     if fresh:
-        colmap = dict(m.get("colmap") or {})
         colmap[name] = fresh
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=schema + [[name, dtype]],
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        generated=generated,
-        colmap=colmap,
-        op="ADD COLUMN",
+        path, m, schema=schema + [[name, dtype]], generated=generated,
+        colmap=colmap, op="ADD COLUMN",
     )
 
 
@@ -2749,15 +2508,7 @@ def widen_column_type(path: str, name: str, new_type: str) -> int:
     new_schema = [
         [n, new_type if n == name else t] for n, t in schema
     ]
-    return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=new_schema,
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        op="ALTER COLUMN TYPE",
-    )
+    return _commit(path, m, schema=new_schema, op="ALTER COLUMN TYPE")
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -2817,27 +2568,17 @@ def rename_column(path: str, old: str, new: str) -> int:
     new_schema = [[new if n == old else n, t] for n, t in schema]
     # Column defaults key by LOGICAL name: the entry (and its `since`
     # version) follows the rename so old files keep default-filling.
-    defaults = None
-    if old in (m.get("defaults") or {}):
-        defaults = dict(m["defaults"])
+    defaults = dict(m.get("defaults") or {})
+    if old in defaults:
         defaults[new] = defaults.pop(old)
     # Identity specs re-key the same way (base maps key by FILE, which a
     # rename never touches).
-    identity = None
-    if old in (m.get("identity") or {}):
-        identity = {c: dict(s) for c, s in m["identity"].items()}
+    identity = {c: dict(s) for c, s in (m.get("identity") or {}).items()}
+    if old in identity:
         identity[new] = identity.pop(old)
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=new_schema,
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        colmap=colmap,
-        defaults=defaults,
-        identity=identity,
-        op="RENAME COLUMN",
+        path, m, schema=new_schema, colmap=colmap, defaults=defaults,
+        identity=identity, op="RENAME COLUMN",
     )
 
 
@@ -2917,19 +2658,10 @@ def drop_column(path: str, name: str) -> int:
             for f, per in (stats or {}).items()
         }
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {},
-        schema=[[n, t] for n, t in schema if n != name],
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        colmap=colmap,
-        generated=generated,
-        defaults=defaults,
-        identity=identity,
-        dropped=list(m.get("dropped") or []) + [phys],
-        op="DROP COLUMN",
+        path, m, schema=[[n, t] for n, t in schema if n != name], stats=stats,
+        stat_cols=stat_cols, colmap=colmap, generated=generated,
+        defaults=defaults, identity=identity,
+        dropped=list(m.get("dropped") or []) + [phys], op="DROP COLUMN",
     )
 
 
@@ -2968,15 +2700,7 @@ def set_constraint(
             f"({expr})"
         )
     cons[name] = expr
-    return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=cons,
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        op="ADD CONSTRAINT",
-    )
+    return _commit(path, m, constraints=cons, op="ADD CONSTRAINT")
 
 
 def drop_constraint(path: str, name: str) -> int:
@@ -2984,15 +2708,7 @@ def drop_constraint(path: str, name: str) -> int:
     m = read_manifest(path)
     cons = dict(m.get("constraints") or {})
     del cons[name]
-    return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=cons,
-        deletes=m.get("deletes"),
-        rows=m.get("rows"),
-        op="DROP CONSTRAINT",
-    )
+    return _commit(path, m, constraints=cons, op="DROP CONSTRAINT")
 
 
 def _check_constraints(m: dict, batch: DataFrame) -> None:
@@ -3382,15 +3098,8 @@ def replace_where(
     )
     new_names += batch_names
     new_files = [f for f in m["files"] if f not in victims] + new_names
-    stats, stat_cols = _updated_stats(m, fs, rel, new_names, victims)
     _commit(
-        path, new_files, m["version"],
-        txns=m.get("txns") or {}, schema=schema,
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=_updated_rows(m, fs, rel, new_names, victims),
-        cdf_files=cdf_names,
+        path, m, new_files, schema=schema, cdf_files=cdf_names,
         op="REPLACE WHERE",
     )
     return n_deleted, n_inserted
@@ -3481,7 +3190,6 @@ def _commit_rewrite_commuting(
     watermark); unlisted new files take the commit's version as usual."""
     while True:
         new_files = [f for f in m["files"] if f not in victims] + new_names
-        stats, stat_cols = _updated_stats(m, fs, rel, new_names, victims)
         seq = None
         if seq_new:
             prev_seq = m.get("seq") or {}
@@ -3496,16 +3204,8 @@ def _commit_rewrite_commuting(
             }
         try:
             _commit(
-                path, new_files, m["version"],
-                txns=m.get("txns") or {}, schema=m.get("schema"),
-                stats=stats, stat_cols=stat_cols,
-                constraints=m.get("constraints"),
-                deletes=m.get("deletes"),
-                rows=_updated_rows(m, fs, rel, new_names, victims),
-                cdf_files=cdf_names,
-                partitions=partitions,
-                seq=seq,
-                op=op,
+                path, m, new_files, cdf_files=cdf_names,
+                partitions=partitions, seq=seq, op=op,
             )
             return
         except CommitConflict:
@@ -3518,11 +3218,7 @@ def _commit_rewrite_commuting(
                 and m2.get("colmap") == m.get("colmap")
             )
             if not compatible:
-                for n in new_names + (cdf_names or []):
-                    try:
-                        fs.remove(os.path.join(rel, n))
-                    except Exception:
-                        pass
+                _remove_quietly(fs, rel, new_names + (cdf_names or []))
                 raise
             m = m2
 
@@ -3544,49 +3240,28 @@ def delete_where_pos(
     resurrect. Returns (dv_files_written, rows_deleted)."""
     m = read_manifest(path)
     new_v = m["version"] + 1
-    if not m.get("deletes"):
-        # No pending entries: the alive view IS the raw read, so the
-        # match count rides the DV-staging pass as an observed metric
-        # (the observe node sits below the coalesce/select — a second
-        # counting scan was pure waste). A no-match predicate stages an
-        # empty frame, which _stage_rewrites drops (zero-row parts are
-        # never referenced), so the early exit stays write-free from any
-        # reader's point of view.
-        obs = Observation()
-        coords = (
-            _read_files(spark, path, m, m["files"], with_meta=True)
-            .filter(F.expr(predicate))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .select("__file", "__row")
-        )
-        staged = _stage_rewrites(coords.coalesce(1), path, "posdel")
-        matches = int(obs.get["n"])
-        if not matches:
-            return 0, 0
-        [name] = staged
-    else:
-        # Pending entries (r12; VERDICT r11 ask #4): the alive view keeps
-        # physical coordinates under keep_meta, so the match count rides
-        # the DV-staging pass as an observed metric here too — this
-        # branch used to pay a dedicated alive-view counting scan PLUS a
-        # second raw-read coordinate scan. Staging only ALIVE matching
-        # coordinates is equivalent to the raw-read coordinates it used
-        # to stage: already-dead rows stay dead through their own entries
-        # (equality entries keep applying by seq, prior DVs stay in the
-        # reader's union), so re-recording them was pure redundancy —
-        # and it is exactly what update_where_pos already stages.
-        obs = Observation()
-        coords = (
-            _with_deletes(spark, path, m, m["files"], keep_meta=True)
-            .filter(F.expr(predicate))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .select("__file", "__row")
-        )
-        staged = _stage_rewrites(coords.coalesce(1), path, "posdel")
-        matches = int(obs.get["n"])
-        if not matches:
-            return 0, 0
-        [name] = staged
+    # The alive view keeps each row's physical coordinates (keep_meta;
+    # with no pending entries it IS the raw read), and the match count
+    # rides the DV-staging pass as an observed metric — no separate
+    # counting scan. Staging only ALIVE matching coordinates is enough:
+    # already-dead rows stay dead through their own entries (equality
+    # entries keep applying by seq, prior DVs stay in the reader's
+    # union), the same rule update_where_pos stages by. A no-match
+    # predicate stages an empty frame, which _stage_rewrites drops
+    # (zero-row parts are never referenced), so the early exit stays
+    # write-free from any reader's point of view.
+    obs = Observation()
+    coords = (
+        _with_deletes(spark, path, m, m["files"], keep_meta=True)
+        .filter(F.expr(predicate))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .select("__file", "__row")
+    )
+    staged = _stage_rewrites(coords.coalesce(1), path, "posdel")
+    matches = int(obs.get["n"])
+    if not matches:
+        return 0, 0
+    [name] = staged
     cdf_names = None
     if _cdf_on(m):
         cdf_names = _stage_changes(
@@ -3597,14 +3272,8 @@ def delete_where_pos(
         )
     entry = {"file": name, "kind": "pos", "seq": new_v}
     _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=(m.get("deletes") or []) + [entry],
-        rows=m.get("rows"),
-        cdf_files=cdf_names,
-        op="DELETE",
+        path, m, deletes=(m.get("deletes") or []) + [entry],
+        cdf_files=cdf_names, op="DELETE",
     )
     return 1, matches
 
@@ -3625,7 +3294,6 @@ def update_where_pos(
     update_where: unknown-column/type-change raises before IO, CHECK
     constraints and generated columns re-verify on the updated batch.
     Returns (dv_files_written, rows_updated)."""
-    fs, rel = get_fs(path)
     m = read_manifest(path)
     new_v = m["version"] + 1
     types = {n: t for n, t in (m.get("schema") or [])}
@@ -3687,16 +3355,9 @@ def update_where_pos(
     new_names = _stage_rewrites(updated, path, "updmor")
     entry = {"file": dv_name, "kind": "pos", "seq": new_v}
     new_files = m["files"] + new_names
-    stats, stat_cols = _updated_stats(m, fs, rel, new_names)
     _commit(
-        path, new_files, m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=(m.get("deletes") or []) + [entry],
-        rows=_updated_rows(m, fs, rel, new_names),
-        cdf_files=cdf_names,
-        op="UPDATE",
+        path, m, new_files, deletes=(m.get("deletes") or []) + [entry],
+        cdf_files=cdf_names, op="UPDATE",
     )
     return 1, n_updated
 
@@ -3837,13 +3498,7 @@ def delete_keys_mor(
     [name] = _stage_rewrites(keys_df.coalesce(1), path, "eqdel")
     entry = {"file": name, "key_col": _physical_col(m, key_col), "seq": new_v}
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        deletes=(m.get("deletes") or []) + [entry],
-        rows=m.get("rows"),
-        op="DELETE",
+        path, m, deletes=(m.get("deletes") or []) + [entry], op="DELETE",
     )
 
 
@@ -3962,16 +3617,9 @@ def materialize_deletes(spark: SparkSession, path: str) -> "tuple[int, int]":
             rewritten = _materialize_ids(rewritten)
         new_names = _stage_rewrites(rewritten, path, "matdel")
     new_files = [f for f in m["files"] if f not in set(victims)] + new_names
-    stats, stat_cols = _updated_stats(m, fs, rel, new_names, set(victims))
     _commit(
-        path, new_files, m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=None,
-        cdf_files=[] if _cdf_on(m) else None,
-        rows=_updated_rows(m, fs, rel, new_names, set(victims)),
-        op="OPTIMIZE",
+        path, m, new_files, deletes=None,
+        cdf_files=[] if _cdf_on(m) else None, op="OPTIMIZE",
     )
     return len(victims), len(dels)
 
@@ -4068,16 +3716,8 @@ def upsert(
     keys_df.unpersist()
     new_names += _stage_rewrites(batch, path, "upsert")
     new_files = [f for f in m["files"] if f not in victims] + new_names
-    fs2, rel2 = get_fs(path)
-    stats, stat_cols = _updated_stats(m, fs2, rel2, new_names, victims)
     return _commit(
-        path, new_files, m["version"],
-        txns=txns, schema=schema,
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=_updated_rows(m, fs2, rel2, new_names, victims),
-        cdf_files=cdf_names,
+        path, m, new_files, txns=txns, schema=schema, cdf_files=cdf_names,
         op="MERGE",
     )
 
@@ -4272,14 +3912,7 @@ def merge_into(
         # METADATA-ONLY version carrying the file list verbatim.
         keys_df.unpersist()
         if txn is not None:
-            _commit(
-                path, m["files"], m["version"],
-                txns=txns_out, schema=m.get("schema"),
-                stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-                constraints=m.get("constraints"),
-                deletes=m.get("deletes"), rows=m.get("rows"),
-                op="MERGE",
-            )
+            _commit(path, m, txns=txns_out, op="MERGE")
         return {
             "updated": 0, "deleted": 0, "inserted": 0,
             "files_rewritten": 0, "nms_updated": 0, "nms_deleted": 0,
@@ -4443,44 +4076,33 @@ def merge_into(
     new_names: "list[str]" = []
     if batch is not None:
         _check_constraints(m, batch)
-    counts_known = False
-    if merge_obs is not None and (
+    # The clause counts are known BEFORE survivor staging when an action
+    # over j has already run — the CDF staging write and/or the
+    # constraint counts — so the all-clauses-empty case below skips the
+    # staged full-rewrite-then-discard outright on CDF/constraint tables.
+    # Bare tables learn the counts from the staging action itself (batch
+    # is never None when the observation exists, so an action is
+    # guaranteed) and pay one discarded staging write on the rare
+    # stats-overapproximated no-match MERGE.
+    counts_known = merge_obs is not None and (
         (merge_changes is not None and cdf_names is not None)
-        or (batch is not None and (m.get("constraints") or {}))
-    ):
-        # r12 (VERDICT r11 ask #8): an action over j has already run —
-        # the CDF staging write and/or the constraint counts — so the
-        # clause counts are known BEFORE survivor staging. Reading them
-        # here lets the all-clauses-empty case below skip the staged
-        # full-rewrite-then-discard outright on CDF/constraint tables.
-        # Bare tables still learn counts from the staging action itself
-        # and pay one discarded staging write on the rare stats-
-        # overapproximated no-match MERGE (priced in OPTIMIZATION_r12.md).
-        vals = merge_obs.get
-        n_deleted = int(vals["d"] or 0)
-        n_updated = int(vals["u"] or 0)
-        n_nms_del = int(vals["nd"] or 0)
-        n_nms_upd = int(vals["nu"] or 0)
-        counts_known = True
-    if batch is not None and not (
-        counts_known
-        and n_updated == 0 and n_deleted == 0 and n_inserted == 0
-        and n_nms_upd == 0 and n_nms_del == 0
-    ):
+        or (batch is not None and bool(m.get("constraints")))
+    )
+    if batch is not None and not counts_known:
         new_names = _stage_rewrites(batch, path, "merge")
-    if merge_obs is not None and not counts_known:
-        # Filled by the first action over j (the survivor staging write;
-        # batch is never None when the observation exists, so an action
-        # is guaranteed).
+    if merge_obs is not None:
         vals = merge_obs.get
         n_deleted = int(vals["d"] or 0)
         n_updated = int(vals["u"] or 0)
         n_nms_del = int(vals["nd"] or 0)
         n_nms_upd = int(vals["nu"] or 0)
-    if (
+    no_change = (
         n_updated == 0 and n_deleted == 0 and n_inserted == 0
         and n_nms_upd == 0 and n_nms_del == 0
-    ):
+    )
+    if batch is not None and counts_known and not no_change:
+        new_names = _stage_rewrites(batch, path, "merge")
+    if no_change:
         # Candidate files held no row matching any clause (stats are an
         # over-approximation): the staged survivors are byte-identical
         # content. Discard the unreferenced staged files and commit
@@ -4491,29 +4113,14 @@ def merge_into(
             fs.remove(os.path.join(rel, f))
         keys_df.unpersist()
         if txn is not None:
-            _commit(
-                path, m["files"], m["version"],
-                txns=txns_out, schema=m.get("schema"),
-                stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-                constraints=m.get("constraints"),
-                deletes=m.get("deletes"), rows=m.get("rows"),
-                op="MERGE",
-            )
+            _commit(path, m, txns=txns_out, op="MERGE")
         return {
             "updated": 0, "deleted": 0, "inserted": 0,
             "files_rewritten": 0, "nms_updated": 0, "nms_deleted": 0,
         }
     new_files = [f for f in m["files"] if f not in victims] + new_names
-    stats, stat_cols = _updated_stats(m, fs, rel, new_names, victims)
     _commit(
-        path, new_files, m["version"],
-        txns=txns_out, schema=m.get("schema"),
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=_updated_rows(m, fs, rel, new_names, victims),
-        cdf_files=cdf_names,
-        op="MERGE",
+        path, m, new_files, txns=txns_out, cdf_files=cdf_names, op="MERGE"
     )
     keys_df.unpersist()
     return {
@@ -4702,17 +4309,7 @@ def scd2_merge(
     ).select(*schema_cols)
     new_names += _stage_rewrites(inserts, path, "scd2ins")
     new_files = [f for f in m["files"] if f not in victims] + new_names
-    fs2, rel2 = get_fs(path)
-    stats, stat_cols = _updated_stats(m, fs2, rel2, new_names, victims)
-    _commit(
-        path, new_files, m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=_updated_rows(m, fs2, rel2, new_names, victims),
-        op="MERGE",
-    )
+    _commit(path, m, new_files, op="MERGE")
     keys_df.unpersist()
     to_insert.unpersist()
     b.unpersist()
@@ -4863,7 +4460,7 @@ def optimize_zorder(
     never see a half-clustered table; the previous version stays
     time-travel-readable until vacuumed; manifest stats (when tracked)
     are recomputed from the new footers in the same commit, so
-    :func:`scan_manifest_table` pruning gets the full benefit of the new
+    :func:`scan_auto` pruning gets the full benefit of the new
     layout on EVERY listed dimension immediately. Returns the committed
     version."""
     from pspcz_analyzer_spark.jobs import zorder_value
@@ -4915,10 +4512,6 @@ def _optimize_layout(
     if rt:
         out = _materialize_ids(out)
     new_names = _stage_rewrites(out, path, "zorder")
-    fs, rel = get_fs(path)
-    stats, stat_cols = _updated_stats(
-        m, fs, rel, new_names, victims=set(m["files"])
-    )
     # A full re-lay RESETS the incremental-clustering state: the spec
     # becomes these columns and the watermark the new commit (so a later
     # optimize_clustered clusters only post-re-lay arrivals instead of
@@ -4928,18 +4521,12 @@ def _optimize_layout(
     if props.get("cluster_by") or len(cols) >= 1:
         props["cluster_by"] = ",".join(cols)
         props["cluster_watermark"] = new_v
+    # The whole snapshot was read (deletes applied) and rewritten: this
+    # commit IS a full materialization, so the delete entries drop here,
+    # and a re-layout is data-neutral for the change feed.
     return _commit(
-        path, new_names, m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        # The whole snapshot was read (deletes applied) and rewritten:
-        # this commit IS a full materialization, entries drop here.
-        deletes=None,
-        rows=_updated_rows(m, fs, rel, new_names, victims=set(m["files"])),
-        cdf_files=[] if _cdf_on(m) else None,  # re-layout: data-neutral,
-        props=props,
-        op="OPTIMIZE",
+        path, m, new_names, deletes=None,
+        cdf_files=[] if _cdf_on(m) else None, props=props, op="OPTIMIZE",
     )
 
 
@@ -5006,7 +4593,6 @@ def optimize_clustered(
     fs, rel = get_fs(path)
     victims = set(pending)
     new_files = [f for f in m["files"] if f not in victims] + new_names
-    stats, stat_cols = _updated_stats(m, fs, rel, new_names, victims)
     prev_seq = {f: int(seq.get(f, m["version"] + 1)) for f in m["files"]}
     new_seq = {
         **{f: prev_seq[f] for f in m["files"] if f not in victims},
@@ -5016,23 +4602,12 @@ def optimize_clustered(
     props["cluster_watermark"] = new_wm
     try:
         _commit(
-            path, new_files, m["version"],
-            txns=m.get("txns") or {}, schema=m.get("schema"),
-            stats=stats, stat_cols=stat_cols,
-            constraints=m.get("constraints"),
-            deletes=m.get("deletes"),
-            rows=_updated_rows(m, fs, rel, new_names, victims),
-            seq=new_seq,
-            props=props,
-            cdf_files=[] if _cdf_on(m) else None,  # re-layout: neutral,
+            path, m, new_files, seq=new_seq, props=props,
+            cdf_files=[] if _cdf_on(m) else None,  # re-layout: neutral
             op="OPTIMIZE",
         )
     except CommitConflict:
-        for n in new_names:
-            try:
-                fs.remove(os.path.join(rel, n))
-            except Exception:
-                pass
+        _remove_quietly(fs, rel, new_names)
         raise
     return len(pending), len(new_names)
 
@@ -5217,12 +4792,12 @@ def restore(path: str, version: int) -> int:
             f"cannot restore {path} to version {version}: "
             f"{len(missing)} data files were vacuumed ({missing[:3]}...)"
         )
+    # Writer watermarks, constraints and the dropped-name ledger carry
+    # from the current version; everything else restores to the target.
     return _commit(
-        path, target["files"], m["version"],
-        txns=m.get("txns") or {},
+        path, m, target["files"],
         schema=target.get("schema"),
         stats=target.get("stats"), stat_cols=target.get("stat_cols"),
-        constraints=m.get("constraints"),
         # The target's delete entries AND its sequence map pass through
         # verbatim — merge-on-read semantics must time-travel exactly.
         deletes=target.get("deletes"),
@@ -5240,10 +4815,10 @@ def restore(path: str, version: int) -> int:
         # would make the next append compute a column the schema
         # rejects. Schema and generated map restore as one unit.
         generated=target.get("generated") or {},
-        # Same unit rule for the column mapping: None would inherit the
-        # CURRENT version's colmap onto the restored schema, so a
-        # restore past a rename would route the old logical name at the
-        # wrong physical column (misread, not just a miss).
+        # Same unit rule for the column mapping: the CURRENT version's
+        # colmap on the restored schema would route the old logical name
+        # at the wrong physical column after a restore past a rename
+        # (misread, not just a miss).
         colmap=target.get("colmap") or {},
         # ... and for column defaults: a restore past an ADD COLUMN with
         # a default must drop the default with the column.
@@ -5333,15 +4908,13 @@ def import_snapshot(
                 "references resolve via os.path.join); use copy=True"
             )
         files = [os.path.join(rel_s, f) for f in src_files]
-    stats = _file_stats(fs_d, rel_d, files, stat_cols) if stat_cols else None
     props = (
         {"bloom_cols": ",".join(bloom_cols)} if bloom_cols else None
     )
     return _commit(
-        dst, files, 0,
+        dst, {"version": 0, "files": []}, files,
         schema=_table_schema_list(dst, files),
-        stats=stats, stat_cols=stat_cols,
-        rows=_updated_rows({}, fs_d, rel_d, files),
+        stat_cols=stat_cols,
         props=props,
         op="CREATE TABLE",
     )
@@ -5384,7 +4957,7 @@ def clone_table(
     ``os.path.join``, which URI schemes would corrupt. Deep clones work
     on any :func:`get_fs`-resolvable pair sharing one filesystem.
     """
-    m = read_manifest(path, version)
+    src = read_manifest(path, version)
     if _versions(dst):
         raise ValueError(f"{dst} is already a manifest table")
     fs_s, rel_s = get_fs(path)
@@ -5394,12 +4967,12 @@ def clone_table(
             "shallow clone requires scheme-less paths (absolute "
             "references resolve via os.path.join); use shallow=False"
         )
-    dels = m.get("deletes") or []
-    needed = list(m["files"]) + [d["file"] for d in dels]
+    dels = src.get("deletes") or []
+    needed = list(src["files"]) + [d["file"] for d in dels]
     missing = [f for f in needed if not fs_s.exists(os.path.join(rel_s, f))]
     if missing:
         raise FileNotFoundError(
-            f"cannot clone {path}@{m['version']}: {len(missing)} files "
+            f"cannot clone {path}@{src['version']}: {len(missing)} files "
             f"already vacuumed ({missing[:3]}...)"
         )
     fs_d.makedirs(rel_d)
@@ -5461,28 +5034,28 @@ def clone_table(
             out[ref[f]] = newcols
         return out
 
-    seq = m.get("seq") or {}
+    seq = src.get("seq") or {}
     shift = max(list(seq.values()) + [d["seq"] for d in dels], default=0)
     return _commit(
         dst,
-        [ref[f] for f in m["files"]],
-        0,
-        schema=m.get("schema"),
-        stats=_rekey(m.get("stats")),
-        stat_cols=m.get("stat_cols"),
-        constraints=m.get("constraints"),
-        rows=_rekey(m.get("rows")),
+        {"version": 0, "files": []},
+        [ref[f] for f in src["files"]],
+        schema=src.get("schema"),
+        stats=_rekey(src.get("stats")),
+        stat_cols=src.get("stat_cols"),
+        constraints=src.get("constraints"),
+        rows=_rekey(src.get("rows")),
         deletes=[
             dict(d, file=ref[d["file"]], seq=d["seq"] - shift) for d in dels
         ]
         or None,
-        seq={ref[f]: seq.get(f, 0) - shift for f in m["files"]},
-        blooms=_clone_blooms(m.get("blooms")),
-        partitions=_rekey(m.get("partitions")),
-        specs=m.get("specs"),
-        current_spec=m.get("current_spec"),
-        colmap=m.get("colmap"),
-        generated=m.get("generated") or {},
+        seq={ref[f]: seq.get(f, 0) - shift for f in src["files"]},
+        blooms=_clone_blooms(src.get("blooms")),
+        partitions=_rekey(src.get("partitions")),
+        specs=src.get("specs"),
+        current_spec=src.get("current_spec"),
+        colmap=src.get("colmap"),
+        generated=src.get("generated"),
         # Column defaults carry with the schema; their `since` version is
         # on the SOURCE's sequence scale, so it shifts exactly like the
         # carried seq entries (defaults keep applying to exactly the
@@ -5490,14 +5063,14 @@ def clone_table(
         # commits, whose files stamp seq >= 1 > since - shift).
         defaults={
             c: dict(d, since=int(d.get("since", 0)) - shift)
-            for c, d in (m.get("defaults") or {}).items()
+            for c, d in (src.get("defaults") or {}).items()
         },
         # Identity base maps re-key to the clone's file names; the
         # allocator cursor (next) carries so the clone's own appends
         # continue the sequence without colliding with carried values.
         identity={
             c: dict(spec, base=_rekey(spec.get("base") or {}))
-            for c, spec in (m.get("identity") or {}).items()
+            for c, spec in (src.get("identity") or {}).items()
         },
         op="CLONE",
     )
@@ -5545,11 +5118,7 @@ def stage_append(df: DataFrame, path: str, ref: str) -> int:
             os.path.join(d, f"{ref}.json"), json.dumps(doc, indent=0).encode()
         )
     except FileExistsError:
-        for n in names:
-            try:
-                fs.remove(os.path.join(rel, n))
-            except Exception:
-                pass
+        _remove_quietly(fs, rel, names)
         raise ValueError(f"staged ref {ref!r} already exists") from None
     return len(names)
 
@@ -5622,16 +5191,7 @@ def publish_staged(spark: SparkSession, path: str, ref: str) -> int:
     _check_schema(m.get("schema") or doc["schema"], staged_view, False)
     _check_constraints(m, staged_view)
     new_names = list(doc["files"])
-    stats, stat_cols = _updated_stats(m, fs, rel, new_names)
-    v = _commit(
-        path, m["files"] + new_names, m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=stats, stat_cols=stat_cols,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"),
-        rows=_updated_rows(m, fs, rel, new_names),
-        op="WRITE",
-    )
+    v = _commit(path, m, m["files"] + new_names, op="WRITE")
     fs.remove(os.path.join(_staged_dir(rel), f"{ref}.json"))
     return v
 
@@ -6301,15 +5861,7 @@ def ensure_blooms(
     ]
     if not missing:
         if props != (m.get("props") or {}):
-            return _commit(
-                path, m["files"], m["version"],
-                txns=m.get("txns"), schema=m.get("schema"),
-                stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-                constraints=m.get("constraints"), deletes=m.get("deletes"),
-                rows=m.get("rows"), seq=m.get("seq"),
-                props=props,
-                op="SET TBLPROPERTIES",
-            )
+            return _commit(path, m, props=props, op="SET TBLPROPERTIES")
         return m["version"]
     # Read through _read_files, NOT a raw parquet scan: columns the
     # manifest serves from METADATA — hive partition fill, initial
@@ -6415,39 +5967,24 @@ def ensure_blooms(
         os.path.join(rel_b, side_name), json.dumps(payload, indent=0).encode()
     )
     try:
-        return _commit(
-            path, m["files"], m["version"],
-            txns=m.get("txns"), schema=m.get("schema"),
-            stats=m.get("stats"), stat_cols=m.get("stat_cols"),
-            constraints=m.get("constraints"), deletes=m.get("deletes"),
-            rows=m.get("rows"), seq=m.get("seq"), blooms=blooms,
-            props=props,
-            op="OPTIMIZE",
-        )
+        return _commit(path, m, blooms=blooms, props=props, op="OPTIMIZE")
     except CommitConflict:
         # Lost the version race: the blob is referenced by nothing —
         # remove it now (vacuum would get it, but why leave garbage).
-        try:
-            fs_b.remove(os.path.join(rel_b, side_name))
-        except Exception:
-            pass
+        _remove_quietly(fs_b, rel_b, [side_name])
         raise
 
 
 def prune_files_bloom(
-    path: str,
-    col: str,
-    value,
-    version: int | None = None,
+    path: str, m: dict, col: str, value
 ) -> "tuple[list[str], int]":
-    """(files that may contain ``col == value``, total files) from the
-    manifest's stored blooms alone — zero file opens. Files without a
-    bloom for ``col`` are conservatively kept (same contract as
-    :func:`prune_files`); intersect with it when range stats are also
-    tracked."""
+    """(files of snapshot ``m`` that may contain ``col == value``, total
+    files) from the stored blooms — no data-file opens; ``path`` locates
+    the bloom sidecar blobs. Files without a bloom for ``col`` are
+    conservatively kept (same contract as :func:`prune_files_multi`);
+    intersect with it when range stats are also tracked."""
     import base64
 
-    m = read_manifest(path, version)
     blooms = m.get("blooms") or {}
     pcol = _physical_col(m, col)
     fs, rel = get_fs(path)
@@ -6495,43 +6032,53 @@ def scan_auto(
     WHICH pruning metadata a table happens to maintain. At a million
     files this is the difference between planning from one JSON and
     listing/footer-opening the world; the exact filter still pushes into
-    the parquet scan for row-group pruning inside the kept files."""
-    m, files, pred_fn = _plan_scan(path, eq, ranges, nulls, version)
-    pred = pred_fn()
+    the parquet scan for row-group pruning inside the kept files.
+
+    The manifest is read ONCE: every pruning source and the read itself
+    see the same snapshot, so a commit landing mid-plan cannot shrink
+    the kept set below the rows of the version planned."""
+    m = read_manifest(path, version)
+    files, pred_fn = _plan_scan(path, m, eq, ranges, nulls)
+    return _scan_files(spark, path, m, files, pred_fn())
+
+
+def _scan_files(
+    spark: SparkSession, path: str, m: dict, files: "list[str]", pred
+) -> DataFrame:
+    """``files`` of snapshot ``m`` through the merge-on-read view, with
+    the exact predicate applied; no kept files gives the snapshot's
+    empty frame (its schema, zero rows)."""
     if not files:
-        return (
-            load_manifest_table(spark, path, version).filter(pred).limit(0)
-        )
+        return _snapshot_df(spark, path, m).filter(pred).limit(0)
     return _with_deletes(spark, path, m, files).filter(pred)
 
 
 def _plan_scan(
     path: str,
+    m: dict,
     eq: "dict[str, object] | None" = None,
     ranges: "dict[str, tuple] | None" = None,
     nulls: "dict[str, bool] | None" = None,
-    version: int | None = None,
-) -> "tuple[dict, list[str], Column]":
+) -> "tuple[list[str], Callable[[], Column]]":
     """The metadata planner behind :func:`scan_auto` and
     :func:`scan_estimate`: intersect every pruning source (partition
-    tokens, [min,max] stats, blooms, null counts) and return
-    ``(manifest, kept files in manifest order, predicate BUILDER)``.
+    tokens, [min,max] stats, blooms, null counts) over snapshot ``m``
+    and return ``(kept files in manifest order, predicate BUILDER)``.
     The exact predicate comes back as a zero-arg closure, not a Column:
     building a Column needs an active SparkContext, and the estimate-
     only consumers (:func:`scan_estimate`, the join planner's sizing
-    pass) must stay session-free. Touches ONLY the manifest JSON — no
-    SparkSession, no data IO."""
+    pass) must stay session-free. Touches ONLY manifest metadata (and
+    bloom sidecars under ``path``) — no SparkSession, no data IO."""
     eq = dict(eq or {})
     ranges = dict(ranges or {})
     if any(v is None for v in eq.values()):
-        raise ValueError("eq values must be non-null; use prune_files_null")
-    m = read_manifest(path, version)
+        raise ValueError("eq values must be non-null; use nulls")
     keep = set(m["files"])
     if eq:
-        k, _t = prune_files_partition(path, eq, version)
+        k, _t = prune_files_partition(m, eq)
         keep &= set(k)
     for c, (lo, hi) in ranges.items():
-        k, _t = prune_files_partition_range(path, c, lo, hi, version)
+        k, _t = prune_files_partition_range(m, c, lo, hi)
         keep &= set(k)
     box = {c: (v, v) for c, v in eq.items()}
     for c, (lo, hi) in ranges.items():
@@ -6542,12 +6089,12 @@ def _plan_scan(
             continue
         box[c] = (lo, hi)
     if box and keep:
-        k, _t = prune_files_multi(path, box, version)
+        k, _t = prune_files_multi(m, box)
         keep &= set(k)
     for c, v in eq.items():
         if not keep:
             break
-        k, _t = prune_files_bloom(path, c, v, version)
+        k, _t = prune_files_bloom(path, m, c, v)
         keep &= set(k)
     nulls = dict(nulls or {})
     for c, want_null in nulls.items():
@@ -6556,7 +6103,7 @@ def _plan_scan(
         if c in eq and want_null:
             keep = set()  # col = v AND col IS NULL: contradiction
             break
-        k, _t = prune_files_null(path, c, want_null, version)
+        k, _t = prune_files_null(m, c, want_null)
         keep &= set(k)
     def pred_fn() -> Column:
         # Built LAZILY: F.col/F.lit need an active SparkContext, and
@@ -6573,8 +6120,7 @@ def _plan_scan(
             )
         return pred
 
-    files = [f for f in m["files"] if f in keep]
-    return m, files, pred_fn
+    return [f for f in m["files"] if f in keep], pred_fn
 
 
 def analyze_columns(path: str, cols: "list[str]") -> int:
@@ -6588,7 +6134,7 @@ def analyze_columns(path: str, cols: "list[str]") -> int:
     Cost: ONE parquet footer-metadata open per existing file (row
     groups' column chunk stats — never data pages), merged into the
     stored stats; every future commit keeps the new columns fresh
-    through the same ``_updated_stats`` path as the original ones.
+    through the same :func:`_commit` path as the original ones.
     Columns already tracked are skipped (an all-tracked call commits
     nothing and returns the current version). Renamed columns are
     accepted by their CURRENT logical name and tracked under their
@@ -6619,12 +6165,7 @@ def analyze_columns(path: str, cols: "list[str]") -> int:
     for f, per in fresh.items():
         stats.setdefault(f, {}).update(per)
     return _commit(
-        path, m["files"], m["version"],
-        txns=m.get("txns") or {}, schema=m.get("schema"),
-        stats=stats, stat_cols=tracked + to_add,
-        constraints=m.get("constraints"),
-        deletes=m.get("deletes"), rows=m.get("rows"),
-        op="ANALYZE",
+        path, m, stats=stats, stat_cols=tracked + to_add, op="ANALYZE"
     )
 
 
@@ -6648,27 +6189,22 @@ def scan_dnf(
     on top. A file is skipped only when EVERY disjunct's metadata
     excludes it, so the result equals
     ``load_manifest_table().filter(c1 OR c2 OR ...)`` row-for-row by
-    construction. Planning stays metadata-only; the version is resolved
-    ONCE up front and pinned through every per-disjunct pass, so a
+    construction. Planning stays metadata-only; the manifest is read
+    ONCE and every per-disjunct pass plans that snapshot, so a
     concurrent commit cannot produce a mixed-snapshot plan."""
     if not disjuncts:
         raise ValueError("scan_dnf needs at least one disjunct")
     m = read_manifest(path, version)
-    version = m["version"]  # pin: every disjunct plans the SAME snapshot
     keep: "set[str]" = set()
     pred = F.lit(False)
     for d in disjuncts:
-        _m, files, p_fn = _plan_scan(
-            path, d.get("eq"), d.get("ranges"), d.get("nulls"), version
+        files, p_fn = _plan_scan(
+            path, m, d.get("eq"), d.get("ranges"), d.get("nulls")
         )
         keep.update(files)
         pred = pred | p_fn()
     files = [f for f in m["files"] if f in keep]
-    if not files:
-        return (
-            load_manifest_table(spark, path, version).filter(pred).limit(0)
-        )
-    return _with_deletes(spark, path, m, files).filter(pred)
+    return _scan_files(spark, path, m, files, pred)
 
 
 def scan_estimate(
@@ -6695,7 +6231,8 @@ def scan_estimate(
     skips even that and leaves it None). Needs no SparkSession: at a
     million files the whole estimate is one JSON read, which is what
     lets a join planner consult BOTH sides before building any plan."""
-    m, files, _pred_fn = _plan_scan(path, eq, ranges, nulls, version)
+    m = read_manifest(path, version)
+    files, _pred_fn = _plan_scan(path, m, eq, ranges, nulls)
     return _estimate_from_plan(path, m, files, with_bytes)
 
 
@@ -7021,17 +6558,14 @@ def join_auto(
         # twice per side.
         m = read_manifest(path, s.get("version"))
         v = m["version"]
-        m, files, pred_fn = _plan_scan(
-            path, s.get("eq"), s.get("ranges"), s.get("nulls"), v
+        files, pred_fn = _plan_scan(
+            path, m, s.get("eq"), s.get("ranges"), s.get("nulls")
         )
         est = _estimate_from_plan(path, m, files, with_bytes=True)
         return est, path, m, v, files, pred_fn
 
-    def _build(path, m, v, files, pred_fn) -> DataFrame:
-        pred = pred_fn()
-        if not files:
-            return load_manifest_table(spark, path, v).filter(pred).limit(0)
-        return _with_deletes(spark, path, m, files).filter(pred)
+    def _build(path, m, files, pred_fn) -> DataFrame:
+        return _scan_files(spark, path, m, files, pred_fn())
 
     lest, lpath, lm, lv, lfiles, lpred = _plan_side(left)
     rest, rpath, rm, rv, rfiles, rpred = _plan_side(right)
@@ -7065,9 +6599,9 @@ def join_auto(
         if how.lower().replace("_", "") in _RUNTIME_PRUNABLE_SIDE[fact_side]:
             dim_df = _build(
                 *(
-                    (lpath, lm, lv, lfiles, lpred)
+                    (lpath, lm, lfiles, lpred)
                     if strategy == "broadcast_left"
-                    else (rpath, rm, rv, rfiles, rpred)
+                    else (rpath, rm, rfiles, rpred)
                 )
             )
             fpath, fm, _fv, ffiles = (
@@ -7103,8 +6637,8 @@ def join_auto(
                 rfiles = kept
             else:
                 lfiles = kept
-    ldf = _build(lpath, lm, lv, lfiles, lpred)
-    rdf = _build(rpath, rm, rv, rfiles, rpred)
+    ldf = _build(lpath, lm, lfiles, lpred)
+    rdf = _build(rpath, rm, rfiles, rpred)
     if strategy == "broadcast_left":
         ldf = F.broadcast(ldf)
     elif strategy == "broadcast_right":
@@ -7169,9 +6703,8 @@ def join_star(
     fspec = {"path": fact} if isinstance(fact, str) else dict(fact)
     fpath = fspec["path"]
     fm = read_manifest(fpath, fspec.get("version"))
-    fv = fm["version"]
-    fm, ffiles, fpred_fn = _plan_scan(
-        fpath, fspec.get("eq"), fspec.get("ranges"), fspec.get("nulls"), fv
+    ffiles, fpred_fn = _plan_scan(
+        fpath, fm, fspec.get("eq"), fspec.get("ranges"), fspec.get("nulls")
     )
     fest = _estimate_from_plan(fpath, fm, ffiles, with_bytes=True)
 
@@ -7184,8 +6717,8 @@ def join_star(
         key = on if isinstance(on, str) else on[0]
         m = read_manifest(path, s.get("version"))
         v = m["version"]
-        m, files, pred_fn = _plan_scan(
-            path, s.get("eq"), s.get("ranges"), s.get("nulls"), v
+        files, pred_fn = _plan_scan(
+            path, m, s.get("eq"), s.get("ranges"), s.get("nulls")
         )
         est = _estimate_from_plan(path, m, files, with_bytes=True)
         # Per-dim broadcast decision: the DIM broadcasts iff the join
@@ -7442,11 +6975,7 @@ def join_star(
             if not ffiles:
                 break
 
-    fpred = fpred_fn()
-    if not ffiles:
-        out = load_manifest_table(spark, fpath, fv).filter(fpred).limit(0)
-    else:
-        out = _with_deletes(spark, fpath, fm, ffiles).filter(fpred)
+    out = _scan_files(spark, fpath, fm, ffiles, fpred_fn())
     for i in order:
         p = planned[i]
         ddf = _star_build(spark, p)
@@ -7480,14 +7009,7 @@ def join_star(
 
 def _star_build(spark: SparkSession, p: dict) -> DataFrame:
     """Materialize one planned :func:`join_star` side as a DataFrame."""
-    pred = p["pred_fn"]()
-    if not p["files"]:
-        return (
-            load_manifest_table(spark, p["path"], p["v"])
-            .filter(pred)
-            .limit(0)
-        )
-    return _with_deletes(spark, p["path"], p["m"], p["files"]).filter(pred)
+    return _scan_files(spark, p["path"], p["m"], p["files"], p["pred_fn"]())
 
 
 # Join types where dropping fact files that match NO dim key cannot
@@ -7568,30 +7090,12 @@ def join_runtime_pruned(
             }
         )
     if not affected:
-        fact = load_manifest_table(spark, fact_path, version).limit(0)
+        fact = _snapshot_df(spark, fact_path, m).limit(0)
     else:
         fact = _with_deletes(spark, fact_path, m, affected)
     if fact_key == dkey:
         return fact.join(dim, fact_key, how)
     return fact.join(dim, fact[fact_key] == dim[dkey], how)
-
-
-def scan_manifest_table_point(
-    spark: SparkSession, path: str, col: str, value
-) -> DataFrame:
-    """Point lookup planned from bloom metadata: read only the files
-    whose bloom admits ``value`` (falling back to all files when blooms
-    aren't built), then apply the exact filter — correctness never
-    depends on the bloom, only the scan size does."""
-    m = read_manifest(path)
-    kept, _total = prune_files_bloom(path, col, value)
-    if not kept:
-        return load_manifest_table(spark, path).filter(
-            F.col(col) == F.lit(value)
-        ).limit(0)
-    return _with_deletes(spark, path, m, kept).filter(
-        F.col(col) == F.lit(value)
-    )
 
 
 def restore_tag(path: str, name: str) -> int:

@@ -599,7 +599,7 @@ def manifest_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     M.manifest_init(path, stat_cols=["user_id", "value"])
     M.optimize_zorder(spark, path, ["user_id", "value"], num_partitions=8)
     return (
-        M.scan_manifest_table(spark, path, "user_id", 3, 9)
+        M.scan_auto(spark, path, ranges={"user_id": (3, 9)})
         .filter(F.col("value").between(10, 40))
         .groupBy("event_type")
         .agg(
@@ -623,7 +623,7 @@ def manifest_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("S10", "manifest", "stats", "file-skipping", "scale"),
     doc="Manifest-level file statistics + metadata-only scan planning "
-    "(manifest.py::manifest_init(stat_cols=...), scan_manifest_table): "
+    "(manifest.py::manifest_init(stat_cols=...), scan_auto): "
     "per-file [min,max] computed ONCE at commit time from the freshly "
     "written footers and stored IN the manifest, so a range scan picks "
     "its file subset from one small JSON — zero footer opens at plan "
@@ -648,7 +648,7 @@ def manifest_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_range_sorted(events, path, "user_id", num_partitions=8)
     M.manifest_init(path, stat_cols=["user_id"])
     return (
-        M.scan_manifest_table(spark, path, "user_id", 10, 20)
+        M.scan_auto(spark, path, ranges={"user_id": (10, 20)})
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -756,14 +756,13 @@ def manifest_generated_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     M.set_partition_spec(path, ["event_day"])
     M.append(events, path)  # writer never mentions event_day
-    parts = M.read_manifest(path).get("partitions") or {}
-    kept, _total = M.prune_files_partition(path, {"event_day": "2024-01-15"})
+    m = M.read_manifest(path)
+    parts = m.get("partitions") or {}
+    kept, _total = M.prune_files_partition(m, {"event_day": "2024-01-15"})
     kept_days = {parts[f]["event_day"] for f in kept if f in parts}
     assert kept_days == {"2024-01-15"}, kept_days
     return (
-        M.scan_manifest_table_partition(
-            spark, path, {"event_day": "2024-01-15"}
-        )
+        M.scan_auto(spark, path, eq={"event_day": "2024-01-15"})
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -872,11 +871,11 @@ def manifest_day_partition_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = _dt.datetime(2024, 1, 12, 18, 0, 0)
     m = M.read_manifest(path)
     parts = m.get("partitions") or {}
-    kept, _total = M.prune_files_partition_range(path, "ts", lo, hi)
+    kept, _total = M.prune_files_partition_range(m, "ts", lo, hi)
     kept_days = {parts[f]["day(ts)"] for f in kept if f in parts}
     assert kept_days == {"2024-01-10", "2024-01-11", "2024-01-12"}, kept_days
     return (
-        M.scan_manifest_table_partition_range(spark, path, "ts", lo, hi)
+        M.scan_auto(spark, path, ranges={"ts": (lo, hi)})
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -997,7 +996,7 @@ def manifest_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     M.append(b2, path)
     m = M.read_manifest(path)
     parts = m.get("partitions") or {}
-    kept, total = M.prune_files_partition(path, {"event_type": "purchase"})
+    kept, total = M.prune_files_partition(m, {"event_type": "purchase"})
     # Every post-evolution file of another type is skipped; every
     # pre-evolution file (no recorded values) is conservatively kept.
     assert all(
@@ -1009,7 +1008,7 @@ def manifest_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), "partition pruning must keep exactly the matching files"
     assert len(kept) < total, "evolution must enable some skipping"
     return (
-        M.scan_manifest_table_partition(spark, path, {"event_type": "purchase"})
+        M.scan_auto(spark, path, eq={"event_type": "purchase"})
         .groupBy((F.col("user_id") % 7).alias("user_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1199,7 +1198,7 @@ def manifest_scan_unpruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_SCAN_BENCH_ORACLE,
     tags=("S10", "manifest", "stats", "file-skipping", "bench", "scale"),
     doc="Stats-pruned half of the manifest read-path bench pair "
-    "(manifest.py::scan_manifest_table): the file subset for the narrow "
+    "(manifest.py::scan_auto): the file subset for the narrow "
     "user_id range is chosen from the manifest's stored per-file "
     "[min,max] — one JSON read, zero footer opens — before Spark ever "
     "plans the scan; on the 32-file range-sorted layout ~30 of 32 files "
@@ -1212,7 +1211,7 @@ def manifest_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _ensure_scan_table(spark, sf_dir)
     return (
-        M.scan_manifest_table(spark, path, "user_id", 10, 16)
+        M.scan_auto(spark, path, ranges={"user_id": (10, 16)})
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1404,7 +1403,7 @@ def manifest_mor_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("S10", "manifest", "zorder", "stats", "box", "new-surface"),
     doc="Multi-dimension metadata pruning (manifest.py::"
-    "scan_manifest_table_box): after OPTIMIZE ZORDER on (user_id, "
+    "scan_auto): after OPTIMIZE ZORDER on (user_id, "
     "value), a small box predicate prunes files on BOTH dimensions at "
     "once from the manifest's stored [min,max] — the query shape "
     "Z-ordering exists for, planned from one JSON with zero footer "
@@ -1429,8 +1428,8 @@ def manifest_scan_box_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     M.manifest_init(path, stat_cols=["user_id", "value"])
     M.optimize_zorder(spark, path, ["user_id", "value"], num_partitions=8)
     return (
-        M.scan_manifest_table_box(
-            spark, path, {"user_id": (3, 9), "value": (10, 40)}
+        M.scan_auto(
+            spark, path, ranges={"user_id": (3, 9), "value": (10, 40)}
         )
         .groupBy("event_type")
         .agg(
@@ -1603,7 +1602,7 @@ def orders_scd2_asof_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("manifest", "bloom", "point-lookup", "scale", "new-surface"),
     priority=18,
     doc="Bloom-pruned point lookup on a NON-layout key (manifest.py::"
-    "ensure_blooms + scan_manifest_table_point): the table is "
+    "ensure_blooms + scan_auto): the table is "
     "range-sorted by user_id, so every file's [min, max] on event_id "
     "overlaps the probe and stats pruning keeps ALL files — the case "
     "min/max structurally cannot help. Per-file bloom filters (md5 "
@@ -1631,17 +1630,16 @@ def manifest_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_range_sorted(events, path, "user_id", num_partitions=16)
     M.manifest_init(path, stat_cols=["user_id", "event_id"])
     M.ensure_blooms(spark, path, "event_id")  # bits auto-sized per file NDV
-    kept, total = M.prune_files_bloom(path, "event_id", 777)
-    kept_stats, _ = M.prune_files(path, "event_id", 777, 777)
+    m = M.read_manifest(path)
+    kept, total = M.prune_files_bloom(path, m, "event_id", 777)
+    kept_stats, _ = M.prune_files_multi(m, {"event_id": (777, 777)})
     # The demo's point: the bloom prunes strictly harder than range stats
     # on a scattered key (at plain sf dirs stats keep ALL 16 files; the
     # 10x replica's strided ids give stats partial traction, so the
     # invariant is the strict win, not stats' total blindness).
     assert len(kept) < len(kept_stats), (len(kept), len(kept_stats), total)
     assert len(kept) <= max(2, total // 4), (len(kept), total)
-    return M.scan_manifest_table_point(spark, path, "event_id", 777).orderBy(
-        "event_id"
-    )
+    return M.scan_auto(spark, path, eq={"event_id": 777}).orderBy("event_id")
 
 
 @register(
@@ -2122,7 +2120,7 @@ def manifest_clone_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("manifest", "stats", "null-pruning", "new-surface"),
     priority=18,
     doc="Null-count file skipping (manifest.py::prune_files_null / "
-    "scan_manifest_table_null — Delta's nullCount in minimal form): a "
+    "scan_auto(nulls=...) — Delta's nullCount in minimal form): a "
     "sparse column (pending-order price, NULL unless status P) written "
     "range-clustered by status leaves most files ALL-NULL — files range "
     "stats are blind to (no min/max at all, conservatively kept) but "
@@ -2150,13 +2148,15 @@ def manifest_null_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         path
     )
     M.manifest_init(path, stat_cols=["pending_price"])
-    kept, total = M.prune_files_null(path, "pending_price", want_null=False)
+    kept, total = M.prune_files_null(
+        M.read_manifest(path), "pending_price", want_null=False
+    )
     if not kept or len(kept) >= total:
         raise AssertionError(
             f"null-count pruning had no effect: kept {len(kept)}/{total}"
         )
     return (
-        M.scan_manifest_table_null(spark, path, "pending_price", False)
+        M.scan_auto(spark, path, nulls={"pending_price": False})
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -2242,7 +2242,7 @@ def manifest_hilbert_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     M.manifest_init(path, stat_cols=["user_id", "value"])
     M.optimize_hilbert(spark, path, ["user_id", "value"], num_partitions=8)
     return (
-        M.scan_manifest_table(spark, path, "user_id", 3, 9)
+        M.scan_auto(spark, path, ranges={"user_id": (3, 9)})
         .filter(F.col("value").between(10, 40))
         .groupBy("event_type")
         .agg(
@@ -3290,7 +3290,9 @@ def interchange_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out["blooms_backfilled"] != 1:
         raise AssertionError("first maintain() tick must backfill blooms")
     probe = M.load_manifest_table(spark, dst).select("o_custkey").first()[0]
-    may, total = M.prune_files_bloom(dst, "o_custkey", probe)
+    may, total = M.prune_files_bloom(
+        dst, M.read_manifest(dst), "o_custkey", probe
+    )
     if not (0 < len(may) <= total):
         raise AssertionError("sidecar blooms must serve point-lookup pruning")
     exp_files1 = sorted(f for f in fs.listdir(rel) if f.endswith(".parquet"))
@@ -3366,7 +3368,7 @@ def hive_adopt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.path.getsize(_os.path.join(path, f)) for f in m["files"]
     ):
         raise AssertionError("adoption must be zero-data-IO (renames only)")
-    may, total = M.prune_files_partition(path, {"prio": "1-URGENT"})
+    may, total = M.prune_files_partition(m, {"prio": "1-URGENT"})
     if not (0 < len(may) < total):
         raise AssertionError("token pruning must give a proper file subset")
     M.delete_where(spark, path, "o_orderkey % 5 = 0")
@@ -3429,7 +3431,9 @@ def manifest_scan_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # proper-subset proof: the token prune alone already restricts to
     # one partition's files (scan_auto intersects it with stats+blooms)
-    may, total = M.prune_files_partition(path, {"prio": "1-URGENT"})
+    may, total = M.prune_files_partition(
+        M.read_manifest(path), {"prio": "1-URGENT"}
+    )
     if not (0 < len(may) < total):
         raise AssertionError("planned file set must be a proper subset")
     return out.select("o_orderkey", "cena").orderBy("o_orderkey")

@@ -1868,7 +1868,8 @@ def clustering_coeff_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _strong_tie_edges(li_raw: DataFrame, min_orders: int = 3) -> DataFrame:
     """Supplier co-occurrence pairs sharing >= ``min_orders`` distinct
     orders: one shuffle on l_orderkey serves the (order, supplier) dedupe
-    AND the wedge self-join (both sides reuse the exchange), then a plain
+    AND the wedge self-join (both sides are clustered on l_orderkey, so
+    Spark may plan the join without a further exchange), then a plain
     count per pair == count(DISTINCT l_orderkey) because each pair row is
     unique per order after the dedupe."""
     li = (

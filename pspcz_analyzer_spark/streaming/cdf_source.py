@@ -628,11 +628,10 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
 
     # -- driver side -------------------------------------------------
     def _cleanup(self, names):
-        for n in names:
-            try:
-                os.remove(os.path.join(self._path, n))
-            except OSError:
-                pass
+        from pspcz_analyzer_spark import manifest as M
+        from pspcz_analyzer_spark.fs import get_fs
+
+        M._remove_quietly(*get_fs(self._path), names)
 
     def commit(self, messages, batchId: int) -> None:
         from pspcz_analyzer_spark import manifest as M
@@ -647,21 +646,12 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
                 # this attempt's files are unreferenced duplicates.
                 self._cleanup(names)
                 return
-            from pspcz_analyzer_spark.fs import get_fs
-
-            fs, rel = get_fs(self._path)
             txns = dict(m.get("txns") or {})
             txns[self._app] = batchId
-            stats, stat_cols = M._updated_stats(m, fs, rel, names)
             try:
                 M._commit(
-                    self._path, m["files"] + names, m["version"],
-                    txns=txns, schema=m.get("schema"),
-                    stats=stats, stat_cols=stat_cols,
-                    constraints=m.get("constraints"),
-                    deletes=m.get("deletes"),
-                    rows=M._updated_rows(m, fs, rel, names),
-                    op="STREAMING WRITE",
+                    self._path, m, m["files"] + names,
+                    txns=txns, op="STREAMING WRITE",
                 )
                 return
             except M.CommitConflict:

@@ -171,7 +171,7 @@ class TestExportSnapshot:
         assert m["props"]["bloom_cols"] == "g"
         out = M.maintain(spark, dst, vacuum_min_age_seconds=0)
         assert out["blooms_backfilled"] == 1
-        may, total = M.prune_files_bloom(dst, "g", 3)
+        may, total = M.prune_files_bloom(dst, M.read_manifest(dst), "g", 3)
         assert 0 < len(may) <= total
         # the import is a live table: DML works and never touches src
         M.delete_where(spark, dst, "k < 10")
@@ -291,9 +291,9 @@ class TestManifestDelete:
         """Two writers planning against the same version: exactly one
         create-exclusive wins, the loser gets CommitConflict."""
         m = M.read_manifest(table)
-        M._commit(table, m["files"], m["version"])  # writer A wins v2
+        M._commit(table, m)  # writer A wins v2
         with pytest.raises(M.CommitConflict):
-            M._commit(table, m["files"], m["version"])  # writer B loses
+            M._commit(table, m)  # writer B loses
 
 
 class TestManifestCompact:
@@ -966,7 +966,7 @@ class TestDropColumn:
             (F.col("id") + 400).alias("k"), F.lit(0).cast("bigint").alias("g")
         )
         M.append(batch, ptab)  # stats refresh must not look for price
-        hits = M.scan_manifest_table(spark, ptab, "k", 400, 500)
+        hits = M.scan_auto(spark, ptab, ranges={"k": (400, 500)})
         assert hits.count() == 3
 
     def test_dropped_ledger_survives_restore(self, spark, ptab):
@@ -1001,13 +1001,13 @@ class TestDeleteConflictCommute:
             (F.col("id") + 900).alias("k"), F.lit(0).cast("bigint").alias("g")
         )
 
-        def racing(path, files, expected_version, **kw):
+        def racing(path, m, files=None, **kw):
             if not state["raced"] and any(
                 n.startswith("delw-") for n in files
             ):
                 state["raced"] = True
                 M.append(wave, ctab)  # interloper wins the version race
-            return orig(path, files, expected_version, **kw)
+            return orig(path, m, files, **kw)
 
         monkeypatch.setattr(M, "_commit", racing)
         # predicate cuts WITHIN files so survivors rewrite (staged delw-)
@@ -1027,13 +1027,13 @@ class TestDeleteConflictCommute:
             F.lit(7).cast("bigint").alias("g"),
         )
 
-        def racing(path, files, expected_version, **kw):
+        def racing(path, m, files=None, **kw):
             if not state["raced"] and any(
                 n.startswith("updw-") for n in files
             ):
                 state["raced"] = True
                 M.append(wave, ctab)
-            return orig(path, files, expected_version, **kw)
+            return orig(path, m, files, **kw)
 
         monkeypatch.setattr(M, "_commit", racing)
         nfiles, nupd = M.update_where(
@@ -1058,13 +1058,13 @@ class TestDeleteConflictCommute:
             F.lit(0).cast("bigint").alias("g"),
         )
 
-        def racing(path, files, expected_version, **kw):
+        def racing(path, m, files=None, **kw):
             if not state["raced"] and any(
                 n.startswith("compact-") for n in files
             ):
                 state["raced"] = True
                 M.append(wave, ctab)
-            return orig(path, files, expected_version, **kw)
+            return orig(path, m, files, **kw)
 
         monkeypatch.setattr(M, "_commit", racing)
         merged, written = M.compact_small_files(
@@ -1081,7 +1081,7 @@ class TestDeleteConflictCommute:
         orig = M._commit
         state = {"raced": False}
 
-        def racing(path, files, expected_version, **kw):
+        def racing(path, m, files=None, **kw):
             if not state["raced"] and any(
                 n.startswith("delw-") for n in files
             ):
@@ -1089,7 +1089,7 @@ class TestDeleteConflictCommute:
                 # Interloper rewrites the SAME region the delete read:
                 # retrying blind would resurrect its effect.
                 M.delete_keys(spark, ctab, "k", [10])
-            return orig(path, files, expected_version, **kw)
+            return orig(path, m, files, **kw)
 
         monkeypatch.setattr(M, "_commit", racing)
         with pytest.raises(M.CommitConflict):
@@ -1127,11 +1127,11 @@ class TestTwoWriterRaceMatrix:
         orig = M._commit
         state = {"raced": False}
 
-        def racing(path, files, expected_version, **kw):
+        def racing(path, m, files=None, **kw):
             if not state["raced"]:
                 state["raced"] = True
                 interloper()
-            return orig(path, files, expected_version, **kw)
+            return orig(path, m, files, **kw)
 
         monkeypatch.setattr(M, "_commit", racing)
         return state
@@ -1601,7 +1601,7 @@ class TestWriteAuditPublish:
         fs, rel = M.get_fs(wtab)
         assert all(fs.exists(os.path.join(rel, n)) for n in staged)
         # the in-flight writer now publishes exactly as it planned
-        M._commit(wtab, m["files"] + staged, m["version"])
+        M._commit(wtab, m, m["files"] + staged)
         assert M.load_manifest_table(spark, wtab).count() == 105
         # and the trade documented on the knob: age 0 means "no writer
         # can be concurrent" — the same unpublished file IS collected
@@ -1627,23 +1627,28 @@ class TestManifestStats:
         return path
 
     def test_prune_skips_files_and_scan_is_exact(self, spark, stats_table):
-        kept, total = M.prune_files(stats_table, "k", 2000, 2999)
+        kept, total = M.prune_files_multi(
+            M.read_manifest(stats_table), {"k": (2000, 2999)}
+        )
         assert total == 10 and 1 <= len(kept) < total  # real skipping
-        got = M.scan_manifest_table(spark, stats_table, "k", 2000, 2999)
+        got = M.scan_auto(spark, stats_table, ranges={"k": (2000, 2999)})
         assert got.count() == 1000
         assert got.agg(F.min("k"), F.max("k")).collect()[0] == (2000, 2999)
 
     def test_untracked_column_never_prunes(self, spark, stats_table):
-        kept, total = M.prune_files(stats_table, "g", 3, 3)
+        kept, total = M.prune_files_multi(
+            M.read_manifest(stats_table), {"g": (3, 3)}
+        )
         assert len(kept) == total  # no stats -> conservative keep
         assert (
-            M.scan_manifest_table(spark, stats_table, "g", 3, 3).count()
+            M.scan_auto(spark, stats_table, ranges={"g": (3, 3)}).count()
             == 10_000 // 7 + 1
         )
 
     def test_stats_refresh_across_commits(self, spark, stats_table):
         M.delete_keys(spark, stats_table, "k", [2500])
-        assert M.scan_manifest_table(spark, stats_table, "k", 2000, 2999).count() == 999
+        got = M.scan_auto(spark, stats_table, ranges={"k": (2000, 2999)})
+        assert got.count() == 999
         b2 = spark.range(90_000, 90_100).select(
             F.col("id").alias("k"),
             (F.col("id") % 7).alias("g"),
@@ -1652,18 +1657,24 @@ class TestManifestStats:
         M.append(b2, stats_table)
         m = M.read_manifest(stats_table)
         assert set(m["stats"]) == set(m["files"])  # every live file covered
-        kept, total = M.prune_files(stats_table, "k", 90_000, 99_999)
+        kept, total = M.prune_files_multi(
+            M.read_manifest(stats_table), {"k": (90_000, 99_999)}
+        )
         assert len(kept) < total
         assert (
-            M.scan_manifest_table(spark, stats_table, "k", 90_000, 99_999).count()
+            M.scan_auto(
+                spark, stats_table, ranges={"k": (90_000, 99_999)}
+            ).count()
             == 100
         )
         # old version's stats stay pinned with it (time travel)
-        kept_v1, _ = M.prune_files(stats_table, "k", 90_000, 99_999, version=1)
+        kept_v1, _ = M.prune_files_multi(
+            M.read_manifest(stats_table, 1), {"k": (90_000, 99_999)}
+        )
         assert kept_v1 == []
 
     def test_empty_prune_returns_empty_frame(self, spark, stats_table):
-        got = M.scan_manifest_table(spark, stats_table, "k", 10**9, 2 * 10**9)
+        got = M.scan_auto(spark, stats_table, ranges={"k": (10**9, 2 * 10**9)})
         assert got.count() == 0
         assert got.columns == ["k", "g", "v"]
 
@@ -1678,14 +1689,18 @@ class TestOptimizeZorder:
         write_range_sorted(df, path, "k", num_partitions=10)
         M.manifest_init(path, stat_cols=["k", "v"])
         # k-sorted layout: every file spans v's full range -> no v-skipping.
-        kept_before, total_before = M.prune_files(path, "v", 100, 199)
+        kept_before, total_before = M.prune_files_multi(
+            M.read_manifest(path), {"v": (100, 199)}
+        )
         assert len(kept_before) == total_before
         v = M.optimize_zorder(spark, path, ["k", "v"], num_partitions=10)
         assert v == 2
-        kept_after, total_after = M.prune_files(path, "v", 100, 199)
+        kept_after, total_after = M.prune_files_multi(
+            M.read_manifest(path), {"v": (100, 199)}
+        )
         assert len(kept_after) < total_after  # the re-layout bought skipping
         # One-version commit, exact results, time travel intact.
-        got = M.scan_manifest_table(spark, path, "v", 100, 199)
+        got = M.scan_auto(spark, path, ranges={"v": (100, 199)})
         assert got.count() == 2_000
         assert M.load_manifest_table(spark, path, version=1).count() == 20_000
         # Stats recomputed in the same commit cover every live file.
@@ -1845,9 +1860,11 @@ def test_string_column_stats_prune(spark, tmp_path):
 
     write_range_sorted(df.withColumn("s", F.col("c")), path, "c", num_partitions=4)
     M.manifest_init(path, stat_cols=["c"])
-    kept, total = M.prune_files(path, "c", "cat_1", "cat_1")
+    kept, total = M.prune_files_multi(
+        M.read_manifest(path), {"c": ("cat_1", "cat_1")}
+    )
     assert 1 <= len(kept) < total
-    got = M.scan_manifest_table(spark, path, "c", "cat_1", "cat_1")
+    got = M.scan_auto(spark, path, ranges={"c": ("cat_1", "cat_1")})
     assert got.count() == 1_000
     assert got.select("c").distinct().collect()[0][0] == "cat_1"
 
@@ -1871,7 +1888,7 @@ class TestVacuumWriterSafety:
         for n in new_names:
             assert os.path.exists(os.path.join(table, n))
         # The writer then publishes cleanly and the table serves old+new.
-        M._commit(table, m["files"] + new_names, m["version"])
+        M._commit(table, m, m["files"] + new_names)
         assert M.load_manifest_table(spark, table).count() == 4_100
 
     def test_vacuum_collects_files_past_the_age_window(self, table):
@@ -1984,7 +2001,9 @@ class TestStatAwareCompaction:
             )
             _shutil.rmtree(tmp)
         M.manifest_init(path, stat_cols=["k"])
-        kept_pre, total_pre = M.prune_files(path, "k", 250, 349)
+        kept_pre, total_pre = M.prune_files_multi(
+            M.read_manifest(path), {"k": (250, 349)}
+        )
         skip_pre = 1 - len(kept_pre) / total_pre
         sizes = [
             os.path.getsize(os.path.join(path, f))
@@ -1995,12 +2014,16 @@ class TestStatAwareCompaction:
             spark, path, target_bytes=int(max(sizes) * 2.2)
         )
         assert merged == 8 and written == 4
-        kept_post, total_post = M.prune_files(path, "k", 250, 349)
+        kept_post, total_post = M.prune_files_multi(
+            M.read_manifest(path), {"k": (250, 349)}
+        )
         skip_post = 1 - len(kept_post) / total_post
         assert skip_post >= skip_pre - 1e-9
         # A narrow query inside ONE original file's range hits exactly
         # one merged output (ranges stayed disjoint).
-        kept_narrow, _ = M.prune_files(path, "k", 110, 120)
+        kept_narrow, _ = M.prune_files_multi(
+            M.read_manifest(path), {"k": (110, 120)}
+        )
         assert len(kept_narrow) == 1
         assert M.load_manifest_table(spark, path).count() == 800
 
@@ -2072,8 +2095,7 @@ class TestAppendCommitRetry:
             mm = M.read_manifest(path)
             txns = dict(mm.get("txns") or {})
             txns.update(extra_txns or {})
-            M._commit(path, mm["files"], mm["version"], txns=txns,
-                      schema=mm.get("schema"), rows=mm.get("rows"))
+            M._commit(path, mm, txns=txns)
             return names
 
         monkeypatch.setattr(M, "_stage_rewrites", stage_and_race)
@@ -2449,12 +2471,12 @@ def test_box_prune_beats_single_dimensions(spark, tmp_path):
     M.manifest_init(path, stat_cols=["a", "b"])
     M.optimize_zorder(spark, path, ["a", "b"], num_partitions=16)
     box = {"a": (10, 25), "b": (10, 25)}
-    kept_box, total = M.prune_files_multi(path, box)
-    kept_a, _ = M.prune_files(path, "a", 10, 25)
-    kept_b, _ = M.prune_files(path, "b", 10, 25)
+    kept_box, total = M.prune_files_multi(M.read_manifest(path), box)
+    kept_a, _ = M.prune_files_multi(M.read_manifest(path), {"a": (10, 25)})
+    kept_b, _ = M.prune_files_multi(M.read_manifest(path), {"b": (10, 25)})
     assert len(kept_box) <= min(len(kept_a), len(kept_b))
     assert len(kept_box) < total  # actually skipped something
-    got = M.scan_manifest_table_box(spark, path, box)
+    got = M.scan_auto(spark, path, ranges=box)
     want = (
         M.load_manifest_table(spark, path)
         .filter(F.col("a").between(10, 25) & F.col("b").between(10, 25))
@@ -2549,7 +2571,7 @@ def test_maintain_backfills_blooms_for_new_files(spark, tmp_path):
     out2 = M.maintain(spark, path, vacuum_min_age_seconds=0)
     assert out2["blooms_backfilled"] == 0
     # pruning works through the backfilled blooms
-    may, total = M.prune_files_bloom(path, "g", 3)
+    may, total = M.prune_files_bloom(path, M.read_manifest(path), "g", 3)
     assert 0 < len(may) <= total
 
 
@@ -3140,19 +3162,23 @@ class TestBloomPruning:
             truth.setdefault(r["event_id"], set()).add(r["f"])
         total_kept = 0
         for eid in range(0, 4000, 131):
-            kept, total = M.prune_files_bloom(path, "event_id", eid)
+            kept, total = M.prune_files_bloom(
+                path, M.read_manifest(path), "event_id", eid
+            )
             assert truth[eid] <= set(kept), f"false negative for {eid}"
             total_kept += len(kept)
         # Real skipping: on average nearly all non-owning files pruned.
         assert total_kept <= 2 * (4000 // 131 + 1)
         # A key that never existed prunes to (almost always) zero files.
-        kept, _ = M.prune_files_bloom(path, "event_id", 10_000_001)
+        kept, _ = M.prune_files_bloom(
+            path, M.read_manifest(path), "event_id", 10_000_001
+        )
         assert len(kept) <= 1
 
     def test_point_scan_matches_filter_and_survives_append(self, spark, tmp_path):
         path = self._mk(spark, tmp_path)
         M.ensure_blooms(spark, path, "event_id", bits=32768, k=6)
-        got = M.scan_manifest_table_point(spark, path, "event_id", 1234).collect()
+        got = M.scan_auto(spark, path, eq={"event_id": 1234}).collect()
         assert [(r["event_id"], r["user_id"]) for r in got] == [(1234, 1234 % 97)]
         # Append WITHOUT re-blooming: the new file has no bloom -> it is
         # conservatively kept, and the point scan still finds new rows.
@@ -3160,19 +3186,19 @@ class TestBloomPruning:
             spark.createDataFrame([(9_999_999, 7)], "event_id long, user_id long"),
             path,
         )
-        kept, total = M.prune_files_bloom(path, "event_id", 9_999_999)
+        kept, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "event_id", 9_999_999
+        )
         assert len(kept) >= 1
-        got = M.scan_manifest_table_point(
-            spark, path, "event_id", 9_999_999
-        ).collect()
+        got = M.scan_auto(spark, path, eq={"event_id": 9_999_999}).collect()
         assert [(r["event_id"], r["user_id"]) for r in got] == [(9_999_999, 7)]
         # Old files' blooms carried through the append commit.
-        assert M.scan_manifest_table_point(
-            spark, path, "event_id", 1234
-        ).count() == 1
+        assert M.scan_auto(spark, path, eq={"event_id": 1234}).count() == 1
         # Backfill the new file; the fresh key now prunes to ~its file.
         M.ensure_blooms(spark, path, "event_id", bits=32768, k=6)
-        kept, total = M.prune_files_bloom(path, "event_id", 9_999_999)
+        kept, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "event_id", 9_999_999
+        )
         assert len(kept) <= 2 and total >= 9
 
     def test_all_null_column_gets_zero_bloom(self, spark, tmp_path):
@@ -3182,7 +3208,9 @@ class TestBloomPruning:
         ).coalesce(1).write.parquet(path)
         M.manifest_init(path)
         M.ensure_blooms(spark, path, "s", bits=1024, k=4)
-        kept, total = M.prune_files_bloom(path, "s", "anything")
+        kept, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "s", "anything"
+        )
         assert kept == [] and total == 1
 
 
@@ -3204,13 +3232,15 @@ class TestBloomAutoSizing:
         assert sizes[1] >= 6 * 50_000 / 0.48  # load kept <= 0.48
         # FP spot-check on the big file: absent keys almost always prune.
         misses = sum(
-            len(M.prune_files_bloom(path, "k", key)[0]) == 0
+            len(M.prune_files_bloom(path, m, "k", key)[0]) == 0
             for key in range(1_000_000, 1_000_200)
         )
         assert misses >= 190, misses
         # Present keys never prune away (subset sweep).
         for key in range(0, 50_000, 7919):
-            kept, _ = M.prune_files_bloom(path, "k", key)
+            kept, _ = M.prune_files_bloom(
+                path, M.read_manifest(path), "k", key
+            )
             assert kept, key
 
 
@@ -3244,7 +3274,9 @@ class TestPartitionEvolution:
         parts = m.get("partitions") or {}
         # Each appended file carries exactly one color; all three appear.
         assert {p["color"] for p in parts.values()} == {"red", "green", "blue"}
-        kept, total = M.prune_files_partition(path, {"color": "red"})
+        kept, total = M.prune_files_partition(
+            M.read_manifest(path), {"color": "red"}
+        )
         pre = [f for f in m["files"] if f not in parts]
         assert set(pre) <= set(kept)  # conservative for pre-evolution
         for f, p in parts.items():
@@ -3252,9 +3284,7 @@ class TestPartitionEvolution:
         # Scan equals the unpruned filtered read.
         got = sorted(
             r.id
-            for r in M.scan_manifest_table_partition(
-                spark, path, {"color": "red"}
-            ).collect()
+            for r in M.scan_auto(spark, path, eq={"color": "red"}).collect()
         )
         want = sorted(
             r.id
@@ -3278,7 +3308,9 @@ class TestPartitionEvolution:
             if p["color"] == "__HIVE_DEFAULT_PARTITION__"
         ]
         assert null_files  # the null batch landed with the hive token
-        kept, _ = M.prune_files_partition(path, {"color": "red"})
+        kept, _ = M.prune_files_partition(
+            M.read_manifest(path), {"color": "red"}
+        )
         assert not set(null_files) & set(kept)  # null rows can't equal 'red'
 
     def test_partition_metadata_survives_delete_and_restore(
@@ -3335,16 +3367,16 @@ class TestHiddenPartitioning:
         assert all(set(p) == {"bucket(8, user_id)"} for p in parts.values())
         # A point lookup on the RAW column prunes to 1-of-8 new files
         # (hidden partitioning: the query never names the transform).
-        kept, total = M.prune_files_partition(path, {"user_id": 333})
+        kept, total = M.prune_files_partition(
+            M.read_manifest(path), {"user_id": 333}
+        )
         new_kept = [f for f in kept if f in parts]
         assert len(new_kept) == 1
         tok = ((333 * 2654435761) % (1 << 32)) % 8
         assert parts[new_kept[0]]["bucket(8, user_id)"] == str(tok)
         got = sorted(
             r.user_id
-            for r in M.scan_manifest_table_partition(
-                spark, path, {"user_id": 333}
-            ).collect()
+            for r in M.scan_auto(spark, path, eq={"user_id": 333}).collect()
         )
         assert got == [333]
 
@@ -3373,12 +3405,14 @@ class TestHiddenPartitioning:
         ts137 = datetime.datetime(2024, 3, 1) + datetime.timedelta(
             seconds=137 * 2000
         )
-        kept, _ = M.prune_files_partition(path, {"event_id": 137, "ts": ts137})
+        kept, _ = M.prune_files_partition(
+            M.read_manifest(path), {"event_id": 137, "ts": ts137}
+        )
         # Exactly one PARTITIONED file survives; the adopted (empty,
         # pre-evolution) part has no entries and is kept conservatively.
         assert len([f for f in kept if f in parts]) == 1
-        rows = M.scan_manifest_table_partition(
-            spark, path, {"event_id": 137, "ts": ts137}
+        rows = M.scan_auto(
+            spark, path, eq={"event_id": 137, "ts": ts137}
         ).collect()
         assert [r.event_id for r in rows] == [137]
 
@@ -3448,13 +3482,17 @@ class TestRenameColumn:
         path, _ = self._mk(spark, tmp_path)
         M.ensure_blooms(spark, path, "user_id")
         M.rename_column(path, "user_id", "uid")
-        kept, total = M.prune_files(path, "uid", 11, 13)
+        kept, total = M.prune_files_multi(
+            M.read_manifest(path), {"uid": (11, 13)}
+        )
         assert 0 < len(kept) < total  # range stats prune through the map
-        keptb, _ = M.prune_files_bloom(path, "uid", 11)
+        keptb, _ = M.prune_files_bloom(path, M.read_manifest(path), "uid", 11)
         assert set(keptb) <= set(M.read_manifest(path)["files"])
         got = sorted(
             r.uid
-            for r in M.scan_manifest_table(spark, path, "uid", 11, 13).collect()
+            for r in M.scan_auto(
+                spark, path, ranges={"uid": (11, 13)}
+            ).collect()
         )
         assert got == [11, 12, 13]
 
@@ -3514,15 +3552,17 @@ class TestPartitionRangePruning:
         assert len(days) >= 3  # ~9 days of data, one file per day
         lo = datetime.datetime(2024, 3, 2, 6, 0, 0)
         hi = datetime.datetime(2024, 3, 3, 18, 0, 0)
-        kept, total = M.prune_files_partition_range(path, "ts", lo, hi)
+        kept, total = M.prune_files_partition_range(
+            M.read_manifest(path), "ts", lo, hi
+        )
         kept_days = {
             parts[f]["day(ts)"] for f in kept if f in parts
         }
         assert kept_days == {"2024-03-02", "2024-03-03"}
         got = sorted(
             r.event_id
-            for r in M.scan_manifest_table_partition_range(
-                spark, path, "ts", lo, hi
+            for r in M.scan_auto(
+                spark, path, ranges={"ts": (lo, hi)}
             ).collect()
         )
         want = sorted(
@@ -3541,13 +3581,15 @@ class TestPartitionRangePruning:
         M.set_partition_spec(path, ["truncate(100, k)"])
         M.append(df, path)
         parts = M.read_manifest(path).get("partitions") or {}
-        kept, _ = M.prune_files_partition_range(path, "k", 150, 210)
+        kept, _ = M.prune_files_partition_range(
+            M.read_manifest(path), "k", 150, 210
+        )
         toks = {parts[f]["truncate(100, k)"] for f in kept if f in parts}
         assert toks == {"100", "200"}
         got = sorted(
             r.k
-            for r in M.scan_manifest_table_partition_range(
-                spark, path, "k", 150, 210
+            for r in M.scan_auto(
+                spark, path, ranges={"k": (150, 210)}
             ).collect()
         )
         assert got == list(range(150, 211))
@@ -3561,9 +3603,7 @@ class TestPartitionRangePruning:
         M.append(small, path2)
         got2 = sorted(
             r.k
-            for r in M.scan_manifest_table_partition_range(
-                spark, path2, "k", 9, 10
-            ).collect()
+            for r in M.scan_auto(spark, path2, ranges={"k": (9, 10)}).collect()
         )
         assert got2 == [9, 10]
 
@@ -3575,7 +3615,9 @@ class TestPartitionRangePruning:
         M.set_partition_spec(path, ["bucket(4, k)"])
         M.append(df, path)
         parts = M.read_manifest(path).get("partitions") or {}
-        kept, total = M.prune_files_partition_range(path, "k", 10, 20)
+        kept, total = M.prune_files_partition_range(
+            M.read_manifest(path), "k", 10, 20
+        )
         # Hash destroys order: every bucketed file is conservatively kept.
         assert set(f for f in kept if f in parts) == set(parts)
 
@@ -3606,15 +3648,15 @@ class TestPartitionAwareCompaction:
         # Every compaction output inherits its group's partition value...
         assert {parts1[f]["par"] for f in outs} == {"even", "odd"}
         # ...so partition pruning is as sharp as before compaction.
-        kept, _ = M.prune_files_partition(path, {"par": "even"})
+        kept, _ = M.prune_files_partition(
+            M.read_manifest(path), {"par": "even"}
+        )
         assert [f for f in kept if f in parts1] == [
             f for f in outs if parts1[f]["par"] == "even"
         ]
         got = sorted(
             r.id
-            for r in M.scan_manifest_table_partition(
-                spark, path, {"par": "even"}
-            ).collect()
+            for r in M.scan_auto(spark, path, eq={"par": "even"}).collect()
         )
         assert got == list(range(0, 120, 2))
 
@@ -3829,8 +3871,8 @@ class TestGeneratedColumns:
         assert len(days) >= 3 and all(d.startswith("2024-06") for d in days)
         got = sorted(
             r.event_id
-            for r in M.scan_manifest_table_partition(
-                spark, path, {"event_day": "2024-06-02"}
+            for r in M.scan_auto(
+                spark, path, eq={"event_day": "2024-06-02"}
             ).collect()
         )
         want = sorted(
@@ -4300,10 +4342,12 @@ class TestNullCountStats:
         from pspcz_analyzer_spark import manifest as M
 
         p = self._table(spark, tmp_path)
-        kept, total = M.prune_files_null(p, "v", want_null=True)
+        kept, total = M.prune_files_null(
+            M.read_manifest(p), "v", want_null=True
+        )
         assert total == 3 and len(kept) == 2  # the no-null file skipped
         rows = sorted(
-            r.k for r in M.scan_manifest_table_null(spark, p, "v", True).collect()
+            r.k for r in M.scan_auto(spark, p, nulls={"v": True}).collect()
         )
         assert rows == [4, 5, 6]
 
@@ -4311,11 +4355,13 @@ class TestNullCountStats:
         from pspcz_analyzer_spark import manifest as M
 
         p = self._table(spark, tmp_path)
-        kept, total = M.prune_files_null(p, "v", want_null=False)
+        kept, total = M.prune_files_null(
+            M.read_manifest(p), "v", want_null=False
+        )
         assert total == 3 and len(kept) == 2  # the all-null file skipped
         rows = sorted(
             r.k
-            for r in M.scan_manifest_table_null(spark, p, "v", False).collect()
+            for r in M.scan_auto(spark, p, nulls={"v": False}).collect()
         )
         assert rows == [1, 2, 3]
 
@@ -4325,7 +4371,7 @@ class TestNullCountStats:
         from pspcz_analyzer_spark import manifest as M
 
         p = self._table(spark, tmp_path)
-        kept, total = M.prune_files(p, "v", 25, 35)
+        kept, total = M.prune_files_multi(M.read_manifest(p), {"v": (25, 35)})
         assert total == 3 and len(kept) == 2
 
     def test_two_element_legacy_entries_read_as_untracked(
@@ -4346,9 +4392,11 @@ class TestNullCountStats:
             for f, cols in doc["stats"].items()
         }
         open(mpath, "w").write(json.dumps(doc))
-        kept, total = M.prune_files_null(p, "v", want_null=True)
+        kept, total = M.prune_files_null(
+            M.read_manifest(p), "v", want_null=True
+        )
         assert len(kept) == total == 3  # untracked -> conservative
-        kept, _ = M.prune_files(p, "v", 25, 35)
+        kept, _ = M.prune_files_multi(M.read_manifest(p), {"v": (25, 35)})
         assert len(kept) == 2  # range pruning unaffected
 
 
@@ -5467,7 +5515,9 @@ class TestCdcLifecycleWaves:
                 40_000 + (day + 1) * 20_000
             )
         # blooms still prune point lookups through the sidecars
-        may, total = M.prune_files_bloom(path, "event_id", 1_000_005)
+        may, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "event_id", 1_000_005
+        )
         assert 0 < len(may) < total
         m = M.read_manifest(path)
         assert all(
@@ -5533,7 +5583,9 @@ class TestCdcLifecycleWaves:
         }
         assert referenced <= left
         # the surviving sidecars still serve probes
-        may, total = M.prune_files_bloom(path, "event_id", 7)
+        may, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "event_id", 7
+        )
         assert 0 < len(may) <= total
 
 
@@ -5591,7 +5643,9 @@ class TestConvertHiveDirectory:
     def test_partition_pruning_from_adopted_tokens(self, spark, tmp_path):
         path = self._mk_hive(spark, tmp_path)
         M.convert_to_manifest(path)
-        may, total = M.prune_files_partition(path, {"day": 1, "src": "true"})
+        may, total = M.prune_files_partition(
+            M.read_manifest(path), {"day": 1, "src": "true"}
+        )
         assert 0 < len(may) < total
         rows = M._read_files(
             spark, path, M.read_manifest(path), may
@@ -5642,7 +5696,9 @@ class TestConvertHiveDirectory:
         t = M.load_manifest_table(spark, path)
         assert t.count() == 302
         assert t.filter(F.col("day") == 7).count() == 2
-        may, _total = M.prune_files_partition(path, {"day": 7})
+        may, _total = M.prune_files_partition(
+            M.read_manifest(path), {"day": 7}
+        )
         assert len(may) == 1  # the new file, laid out per the spec
 
     def test_flat_directory_degrades_to_manifest_init(self, spark, tmp_path):
@@ -5674,12 +5730,16 @@ class TestBloomsOverMetadataServedColumns:
         M.ensure_blooms(spark, path, "day")
         # every day value exists; its file(s) must survive the bloom
         for v in range(4):
-            may, total = M.prune_files_bloom(path, "day", v)
+            may, total = M.prune_files_bloom(
+                path, M.read_manifest(path), "day", v
+            )
             assert may, f"false negative: day={v} pruned everywhere"
-            got = M.scan_manifest_table_point(spark, path, "day", v).count()
+            got = M.scan_auto(spark, path, eq={"day": v}).count()
             assert got == 50
         # and a missing value still prunes (the bloom is not vacuous)
-        may, total = M.prune_files_bloom(path, "day", 999)
+        may, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "day", 999
+        )
         assert len(may) < total
 
     def test_bloom_on_initial_default_column(self, spark, tmp_path):
@@ -5689,11 +5749,11 @@ class TestBloomsOverMetadataServedColumns:
         M.add_column(path, "src", "string", initial_default="'legacy'")
         M.ensure_blooms(spark, path, "src")
         # the default value is metadata-served for the pre-existing file
-        may, _total = M.prune_files_bloom(path, "src", "legacy")
+        may, _total = M.prune_files_bloom(
+            path, M.read_manifest(path), "src", "legacy"
+        )
         assert may, "false negative on the initial-default value"
-        assert M.scan_manifest_table_point(
-            spark, path, "src", "legacy"
-        ).count() == 50
+        assert M.scan_auto(spark, path, eq={"src": "legacy"}).count() == 50
 
 
 class TestAdoptedTableLifecycle:
@@ -5741,12 +5801,12 @@ class TestAdoptedTableLifecycle:
         m = M.read_manifest(path)
         # compaction grouped by the recorded partition tuple: every
         # output carries its day value and pruning still works
-        may, total = M.prune_files_partition(path, {"day": 2})
+        may, total = M.prune_files_partition(M.read_manifest(path), {"day": 2})
         assert 0 < len(may) < total
         t = M.load_manifest_table(spark, path)
         assert t.count() == 240
         assert t.filter(F.col("day") == 2).count() == 60
-        got = M.scan_manifest_table_point(spark, path, "day", 3).count()
+        got = M.scan_auto(spark, path, eq={"day": 3}).count()
         assert got == 60
 
     def test_append_only_cdf_fills_partition_values(self, spark, tmp_path):
@@ -5784,7 +5844,7 @@ def test_zorder_on_adopted_table_materializes_and_keeps_values(
     assert t.filter(F.col("day") == 3).count() == 50
     assert t.filter(F.col("day").isNull()).count() == 0
     # stats recomputed from the new footers include the materialized col
-    may, total = M.prune_files(path, "day", 3, 3)
+    may, total = M.prune_files_multi(M.read_manifest(path), {"day": (3, 3)})
     assert 0 < len(may) <= total
 
 
@@ -5860,7 +5920,9 @@ class TestScanAuto:
             1 for i in range(1000) if (i * 13) % 50 == 26
         )
         assert n_scanned >= 1  # plan sanity; the real subset check:
-        may_stats, total = M.prune_files(path, "k", 0, 999)
+        may_stats, total = M.prune_files_multi(
+            M.read_manifest(path), {"k": (0, 999)}
+        )
         assert 0 < len(may_stats) < total
 
     def test_contradictory_eq_and_range_returns_empty(self, spark, tmp_path):
@@ -5982,7 +6044,7 @@ class TestTwoLevelManifests:
         M.delete_keys_mor(spark, path, "k", [10, 11])
         t = M.load_manifest_table(spark, path)
         assert t.count() == 1198
-        may, total = M.prune_files_bloom(path, "g", 3)
+        may, total = M.prune_files_bloom(path, M.read_manifest(path), "g", 3)
         assert 0 < len(may) <= total
         v = M.current_version(path)
         M.append(
@@ -6046,7 +6108,7 @@ def test_segmented_commit_conflict_cleans_fresh_segments(
     # contender drops a file -> its only segment is dirty -> it must
     # WRITE a fresh segment before losing the race
     with pytest.raises(M.CommitConflict):
-        M._commit(path, m["files"][:2], 1, schema=m.get("schema"))
+        M._commit(path, m, m["files"][:2])
     assert len(os.listdir(segdir)) == n0  # loser's segments removed
     # winner's (flat) v2 still reads
     assert M.read_manifest(path, 2)["version"] == 2
@@ -6110,7 +6172,7 @@ def test_scan_auto_composes_null_pruning(spark, tmp_path):
     )
     assert got.count() == 100
     # proper file subset through the null counts
-    may, total = M.prune_files_null(path, "g", True)
+    may, total = M.prune_files_null(M.read_manifest(path), "g", True)
     assert 0 < len(may) < total
     # contradiction short-circuits
     assert M.scan_auto(spark, path, eq={"g": 3}, nulls={"g": True}).count() == 0
@@ -8023,7 +8085,9 @@ class TestCrashPointsTwoLevelCommits:
         # matrix restored the base: one clean build, then blooms must
         # actually prune (a value outside the domain keeps no file)
         op()
-        kept, total = M.prune_files_bloom(path, "g", 99_999)
+        kept, total = M.prune_files_bloom(
+            path, M.read_manifest(path), "g", 99_999
+        )
         assert total == 6 and len(kept) < total
 
 

@@ -1,0 +1,203 @@
+"""One snapshot per manifest operation: scans plan and read the version
+they read once, even when a commit lands mid-plan; metadata-only commits
+carry every field they do not own; adopted Parquet timestamps keep the
+type Spark reads them back as."""
+
+from __future__ import annotations
+
+import datetime as dt
+import shutil
+
+import pyspark.sql.functions as F
+import pytest
+
+from pspcz_analyzer_spark import manifest as M
+from pspcz_analyzer_spark.jobs import write_range_sorted
+
+
+def _small_file_table(spark, tmp_path, name="snap"):
+    df = spark.range(600).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("g")
+    )
+    path = str(tmp_path / name)
+    write_range_sorted(df, path, "k", num_partitions=6)
+    M.manifest_init(path, stat_cols=["k"])
+    return path
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "pred",
+    [{"eq": {"k": 42}}, {"ranges": {"k": (100, 450)}}],
+    ids=["eq", "ranges"],
+)
+def test_scan_auto_reads_the_version_it_planned(
+    spark, tmp_path, monkeypatch, pred
+):
+    """A compaction committing right after the scan's manifest read must
+    not change what the scan returns: every pruning source and the read
+    itself use the snapshot read first."""
+    path = _small_file_table(spark, tmp_path)
+    v = M.current_version(path)
+    real_read = M.read_manifest
+    fired = {"v": None}
+
+    def read_then_compact(p, version=None):
+        m = real_read(p, version)
+        if fired["v"] is None:
+            fired["v"] = m["version"]
+            merged, _written = M.compact_small_files(
+                spark, p, target_bytes=1 << 20
+            )
+            assert merged == 6  # every file of the read version replaced
+        return m
+
+    monkeypatch.setattr(M, "read_manifest", read_then_compact)
+    got = _rows(M.scan_auto(spark, path, **pred))
+    monkeypatch.setattr(M, "read_manifest", real_read)
+    assert fired["v"] == v and M.current_version(path) == v + 1
+    eq = pred.get("eq", {})
+    ranges = pred.get("ranges", {})
+    cond = F.lit(True)
+    for c, val in eq.items():
+        cond = cond & (F.col(c) == val)
+    for c, (lo, hi) in ranges.items():
+        cond = cond & F.col(c).between(lo, hi)
+    want = _rows(M.load_manifest_table(spark, path, v).filter(cond))
+    assert want and got == want
+
+
+def test_scans_read_the_manifest_once(spark, tmp_path, monkeypatch):
+    path = _small_file_table(spark, tmp_path)
+    M.ensure_blooms(spark, path, "g")
+    real_read = M.read_manifest
+    calls = []
+
+    def counting(p, version=None):
+        calls.append(version)
+        return real_read(p, version)
+
+    monkeypatch.setattr(M, "read_manifest", counting)
+    scans = {
+        "scan_auto eq": lambda: M.scan_auto(spark, path, eq={"k": 5, "g": 5}),
+        "scan_auto ranges+nulls": lambda: M.scan_auto(
+            spark, path, ranges={"k": (10, 90)}, nulls={"g": False}
+        ),
+        "scan_auto no file kept": lambda: M.scan_auto(
+            spark, path, ranges={"k": (10_000, 20_000)}
+        ),
+        "scan_dnf": lambda: M.scan_dnf(
+            spark, path, [{"eq": {"k": 5}}, {"ranges": {"k": (300, 320)}}]
+        ),
+        "scan_estimate": lambda: M.scan_estimate(path, eq={"g": 3}),
+    }
+    for name, scan in scans.items():
+        del calls[:]
+        scan()
+        assert len(calls) == 1, (name, calls)
+
+
+# op name -> (call, manifest fields the op may change)
+_METADATA_OPS = {
+    "set_constraint": (
+        lambda spark, p: M.set_constraint(spark, p, "k_nonneg", "k >= 0"),
+        {"constraints"},
+    ),
+    "drop_constraint": (
+        lambda spark, p: M.drop_constraint(p, "g_small"),
+        {"constraints"},
+    ),
+    "set_table_properties": (
+        lambda spark, p: M.set_table_properties(p, owner="etl"),
+        {"props"},
+    ),
+    "add_column": (
+        lambda spark, p: M.add_column(p, "note", "string"),
+        {"schema"},
+    ),
+    "rename_column": (
+        lambda spark, p: M.rename_column(p, "v", "w"),
+        {"schema", "colmap"},
+    ),
+    "analyze_columns": (
+        lambda spark, p: M.analyze_columns(p, ["g"]),
+        {"stats", "stat_cols"},
+    ),
+}
+# Fields every commit sets for itself.
+_PER_COMMIT = {"version", "ts", "op", "protocol", "cdf_files"}
+
+
+@pytest.fixture(scope="module")
+def rich_base(spark, tmp_path_factory):
+    """A table whose manifest fills every carried field a metadata-only
+    commit could drop: stats, rows, seq, blooms, partition spec and
+    values, constraints, props, writer watermarks, pending deletes."""
+    path = str(tmp_path_factory.mktemp("carry") / "t")
+    df = spark.range(60).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).alias("g"),
+        (F.col("id") * 2).alias("v"),
+    )
+    write_range_sorted(df.filter("k < 30"), path, "k", num_partitions=2)
+    M.manifest_init(path, stat_cols=["k"])
+    M.set_partition_spec(path, ["g"])
+    M.append(df.filter("k >= 30"), path, txn=("app", 7))
+    M.set_constraint(spark, path, "g_small", "g < 3")
+    M.set_table_properties(path, team="lake")
+    M.ensure_blooms(spark, path, "k")
+    M.delete_keys_mor(spark, path, "k", [1, 2])
+    base = M.read_manifest(path)
+    for field in ("stats", "rows", "seq", "blooms", "partitions", "specs",
+                  "constraints", "props", "txns", "deletes"):
+        assert base.get(field), field
+    return path
+
+
+@pytest.mark.parametrize("op", sorted(_METADATA_OPS))
+def test_metadata_commit_carries_every_field_it_does_not_own(
+    spark, rich_base, tmp_path, op
+):
+    path = str(tmp_path / "copy")
+    shutil.copytree(rich_base, path)
+    base = M.read_manifest(path)
+    call, owned = _METADATA_OPS[op]
+    v = call(spark, path)
+    new = M.read_manifest(path)
+    assert v == new["version"] == base["version"] + 1
+    skip = owned | _PER_COMMIT
+    assert {k: x for k, x in new.items() if k not in skip} == {
+        k: x for k, x in base.items() if k not in skip
+    }
+    assert any(new.get(k) != base.get(k) for k in owned), owned
+
+
+@pytest.mark.parametrize("adopt", ["manifest_init", "convert_to_manifest"])
+def test_adopted_ntz_timestamps_accept_their_own_data(
+    spark, tmp_path, adopt
+):
+    """Spark writes TIMESTAMP_NTZ as Parquet TIMESTAMP(isAdjustedToUTC=
+    false); adoption must record it as timestamp_ntz, or the first append
+    of the same data is refused as a type change."""
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1, 12, 0), 0),
+         (2, dt.datetime(2024, 1, 2, 8, 30), 1)],
+        "k long, ts timestamp_ntz, p long",
+    )
+    path = str(tmp_path / adopt)
+    if adopt == "manifest_init":
+        df.write.parquet(path)
+        M.manifest_init(path)
+    else:
+        df.write.partitionBy("p").parquet(path)
+        M.convert_to_manifest(path)
+    assert dict(M.read_manifest(path)["schema"])["ts"] == "timestamp_ntz"
+    M.append(df, path)
+    got = M.load_manifest_table(spark, path)
+    assert got.count() == 4
+    assert _rows(got.filter("k = 2").select("ts")) == [
+        (dt.datetime(2024, 1, 2, 8, 30),)
+    ] * 2

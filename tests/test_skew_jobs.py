@@ -855,9 +855,10 @@ class TestHilbertValue:
         ]
         def kept(p):
             tot = 0
+            m = M.read_manifest(p)
             for alo, ahi, blo, bhi in boxes:
                 files, _ = M.prune_files_multi(
-                    p, {"a": (alo, ahi), "b": (blo, bhi)}
+                    m, {"a": (alo, ahi), "b": (blo, bhi)}
                 )
                 tot += len(files)
             return tot
@@ -872,8 +873,8 @@ class TestHilbertValue:
             .filter(F.col("a").between(alo, ahi) & F.col("b").between(blo, bhi))
             .count()
         )
-        got = M.scan_manifest_table_box(
-            spark, hp, {"a": (alo, ahi), "b": (blo, bhi)}
+        got = M.scan_auto(
+            spark, hp, ranges={"a": (alo, ahi), "b": (blo, bhi)}
         ).count()
         assert got == exact
 

@@ -3,7 +3,7 @@
 1. manifest_scan_pruned vs manifest_scan_unpruned at sf0.1 and the 10x
    replica (tools/build_scale10.py output), best-of-two on a warm session
    with the shared scan table pre-built — isolates the READ paths. Also
-   records the kept/total file counts from prune_files (the metadata-only
+   records the kept/total file counts from prune_files_multi (the metadata-only
    decision itself).
 2. semantic_dedup on a deliberately skewed clustering (80% of vectors in
    one cell) with and without salt_cells, plus a balanced-cells baseline
@@ -43,7 +43,9 @@ def measure_scan(spark, sf_dir: str, tag: str) -> None:
     )
 
     path = _ensure_scan_table(spark, sf_dir)
-    kept, total = M.prune_files(path, "user_id", 10, 16)
+    kept, total = M.prune_files_multi(
+        M.read_manifest(path), {"user_id": (10, 16)}
+    )
     up = best2(lambda: manifest_scan_unpruned(spark, sf_dir).collect())
     pr = best2(lambda: manifest_scan_pruned(spark, sf_dir).collect())
     print(
