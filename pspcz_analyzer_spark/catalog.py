@@ -7,7 +7,7 @@ snapshots per query (Parquet readers see a consistent file set), which
 replaces the reference's mtime-based file watcher for freshness.
 
 The driver's synthetic star schema (TESTDATA.md) uses the same mechanism:
-``load_tables(spark, "/root/testdata/sf0.01")`` gives every query its inputs.
+``load_table(spark, sf_dir, name)`` gives every query its inputs.
 """
 
 from __future__ import annotations
@@ -59,24 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load a table set; skips names whose files are absent."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            out[name] = load_table(spark, sf_dir, name)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql()."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def default_sf_dir() -> str:

@@ -1412,7 +1412,16 @@ def prune_files_multi(
     Z-ordered file is a narrow bounding box in every listed dimension,
     so a small box prunes on all of them at once). Unknown stats on a
     column keep the file for that column: skipping is only ever an
-    optimization, never a filter."""
+    optimization, never a filter. Date and datetime bounds compare in
+    the ISO form :func:`_json_stat` stores their stats in."""
+    import datetime as _dt
+
+    def _as_stat(v):
+        return v.isoformat() if isinstance(v, (_dt.date, _dt.datetime)) else v
+
+    predicates = {
+        col: (_as_stat(lo), _as_stat(hi)) for col, (lo, hi) in predicates.items()
+    }
     stats = m.get("stats") or {}
     kept = []
     for f in m["files"]:

@@ -5,16 +5,31 @@ the Polars compute in a pool
 (/root/reference/pspcz_analyzer/routes/voting.py:23-45). Here step 5 is a
 lazy Spark plan; the facade collects the (small) result to row dicts at the
 serving edge only — operators themselves never collect. The TTL cache
-absorbs repeats; a data refresh calls ``invalidate()``.
+absorbs repeats.
+
+Cache misses build on one base-frame registry per service
+(:meth:`QueryService._frame`): the table scans, the derived vote tables and
+the catalog-query frames the endpoints share are built once and reused, so
+a miss pays neither a file listing nor a schema-inference job before its
+own work. A reused frame pins its file listing — after a Parquet file is
+replaced it reads wrong rows with no error — so the registry has two
+freshness rules: ``invalidate()`` (a data refresh) drops it, and every
+lookup compares a fingerprint of the table files (name, size, mtime_ns)
+with the one taken when the frames were built and rebuilds them when the
+files changed. The ``sql()`` views are a registry entry too.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import threading
+from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from pspcz_analyzer_spark.catalog import TESTDATA_TABLES, load_table, table_path
 from pspcz_analyzer_spark.operators import voting as V
 from pspcz_analyzer_spark.plans import query_fns
 from pspcz_analyzer_spark.plans.voting import (
@@ -25,6 +40,27 @@ from pspcz_analyzer_spark.plans.voting import (
 from pspcz_analyzer_spark.serving.cache import TTLCache
 
 Rows = list[dict[str, Any]]
+
+
+def _table_fingerprint(sf_dir: str) -> tuple:
+    """(path, size, mtime_ns) of every file behind the testdata tables of
+    ``sf_dir`` — a table is one Parquet file or a directory of part files.
+    Any replaced, added or removed file changes the tuple."""
+    out = []
+    for t in TESTDATA_TABLES:
+        p = table_path(sf_dir, t)
+        files = (
+            [p]
+            if os.path.isfile(p)
+            else sorted(os.path.join(r, n) for r, _, ns in os.walk(p) for n in ns)
+        )
+        for f in files:
+            try:
+                st = os.stat(f)
+            except FileNotFoundError:  # removed since the listing
+                continue
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
 
 
 def _strip_sql_quoted(sql: str, backslash_escapes: bool = True) -> str:
@@ -222,6 +258,53 @@ class QueryService:
         self.cache = TTLCache(ttl_seconds, **kwargs)
         self.compute_calls = 0  # observability: cache-miss counter
         self.budget_seconds = budget_seconds
+        # Base-frame registry: name -> frame, valid for the table files
+        # whose fingerprint is _frames_fp (see _frame).
+        self._frames: dict[str, Any] = {}
+        self._frames_fp: tuple | None = None
+        self._frames_lock = threading.Lock()
+
+    def _frame(self, name: str, build: Callable[[], Any]) -> Any:
+        """Registry entry ``name``: ``build()``'s result, built on first use
+        and shared by every later cache miss until ``invalidate()`` drops
+        the registry or the table files' fingerprint changes."""
+        fp = _table_fingerprint(self.sf_dir)
+        with self._frames_lock:
+            if fp != self._frames_fp:
+                self._frames, self._frames_fp = {}, fp
+            frames = self._frames
+            if name in frames:
+                return frames[name]
+        # Built outside the lock, like TTLCache.compute: a slow build (the
+        # steno fixture behind amendments_merged) must not stall every
+        # other miss; a duplicate build on a race is dropped.
+        value = build()
+        with self._frames_lock:
+            if frames is self._frames:  # registry not dropped meanwhile
+                value = frames.setdefault(name, value)
+        return value
+
+    def _table(self, name: str) -> DataFrame:
+        return self._frame(
+            f"table:{name}", lambda: load_table(self.spark, self.sf_dir, name)
+        )
+
+    def _vote_tables(self) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(mp_votes, void_votes, mp_info): the derived tables every voting
+        endpoint starts from."""
+        return self._frame(
+            "vote_tables",
+            lambda: (
+                derive_mp_votes(self.spark, self.sf_dir),
+                derive_void_votes(self.spark, self.sf_dir),
+                derive_mp_info(self.spark, self.sf_dir),
+            ),
+        )
+
+    def _query_frame(self, name: str) -> DataFrame:
+        return self._frame(
+            f"query:{name}", lambda: query_fns()[name](self.spark, self.sf_dir)
+        )
 
     def _collect_budgeted(self, df_fn) -> Rows:
         """Collect under the compute budget via job-group cancellation.
@@ -234,7 +317,6 @@ class QueryService:
         """
         if not self.budget_seconds:
             return [r.asDict(recursive=True) for r in df_fn().collect()]
-        import threading
         import uuid
 
         sc = self.spark.sparkContext
@@ -289,9 +371,7 @@ class QueryService:
         return self._cached(
             key,
             lambda: V.loyalty(
-                derive_mp_votes(self.spark, self.sf_dir),
-                derive_void_votes(self.spark, self.sf_dir),
-                derive_mp_info(self.spark, self.sf_dir),
+                *self._vote_tables(),
                 top=top,
                 party_filter=party,
             ),
@@ -304,9 +384,7 @@ class QueryService:
         return self._cached(
             key,
             lambda: V.attendance(
-                derive_mp_votes(self.spark, self.sf_dir),
-                derive_void_votes(self.spark, self.sf_dir),
-                derive_mp_info(self.spark, self.sf_dir),
+                *self._vote_tables(),
                 top=top,
                 sort=sort,
                 party_filter=party,
@@ -322,9 +400,7 @@ class QueryService:
         return self._cached(
             key,
             lambda: mp_cosine_pairs(
-                derive_mp_votes(self.spark, self.sf_dir),
-                derive_void_votes(self.spark, self.sf_dir),
-                derive_mp_info(self.spark, self.sf_dir),
+                *self._vote_tables(),
                 k=top,
                 cross_party_only=cross_party_only,
             ),
@@ -338,14 +414,9 @@ class QueryService:
         from pyspark.sql import Window
 
         def build():
-            one = derive_mp_votes(self.spark, self.sf_dir).filter(
-                F.col("id_hlasovani") == vote_id
-            )
-            info = F.broadcast(
-                derive_mp_info(self.spark, self.sf_dir).select(
-                    "id_poslanec", "jmeno", "party"
-                )
-            )
+            mp, _void, info = self._vote_tables()
+            one = mp.filter(F.col("id_hlasovani") == vote_id)
+            info = F.broadcast(info.select("id_poslanec", "jmeno", "party"))
             # Tallies partition by (vote id, party) / vote id — constant
             # after the point filter, so no global single-partition window.
             pw = Window.partitionBy("id_hlasovani", "party")
@@ -384,16 +455,12 @@ class QueryService:
         page, one plan per call."""
         import pyspark.sql.functions as F
 
-        from pspcz_analyzer_spark.catalog import load_table
         from pspcz_analyzer_spark.functions.text import contains_normalized
         from pspcz_analyzer_spark.operators.pagination import page_offset
 
         def build():
-            orders = load_table(self.spark, self.sf_dir, "orders")
-            cust = load_table(self.spark, self.sf_dir, "customer").select(
-                "c_custkey", "c_name"
-            )
-            hits = orders
+            hits = self._table("orders")
+            cust = self._table("customer").select("c_custkey", "c_name")
             if status is not None:
                 hits = hits.filter(F.col("o_orderstatus") == status)
             if priorities:
@@ -437,7 +504,7 @@ class QueryService:
         from pspcz_analyzer_spark.operators.pagination import page_offset
 
         def build():
-            df = query_fns()["amendments_merged"](self.spark, self.sf_dir)
+            df = self._query_frame("amendments_merged")
             if search:
                 df = df.filter(contains_normalized("submitters", search))
             total = df.agg(F.count(F.lit(1)).alias("total_hits"))
@@ -458,14 +525,13 @@ class QueryService:
         cohesion (overall + amendment votes) and cross-party pair
         agreement, both already-green catalog queries. The two parts cache
         and budget independently through the standard path."""
-        fns = query_fns()
         cohesion = self._cached(
             f"coalitions:cohesion:{self.sf_dir}",
-            lambda: fns["coalition_cohesion"](self.spark, self.sf_dir),
+            lambda: self._query_frame("coalition_cohesion"),
         )
         pairs = self._cached(
             f"coalitions:pairs:{self.sf_dir}",
-            lambda: fns["party_pair_agreement"](self.spark, self.sf_dir),
+            lambda: self._query_frame("party_pair_agreement"),
         )
         return {"cohesion": cohesion, "pair_agreement": pairs}
 
@@ -524,9 +590,9 @@ class QueryService:
         from pspcz_analyzer_spark.serving.charts import render_chart
 
         def build():
-            coords = query_fns()["mp_pca_coords"](self.spark, self.sf_dir)
+            coords = self._query_frame("mp_pca_coords")
             info = F.broadcast(
-                derive_mp_info(self.spark, self.sf_dir).select(
+                self._vote_tables()[2].select(
                     "id_poslanec", "jmeno", "prijmeni", "party"
                 )
             )
@@ -570,16 +636,11 @@ class QueryService:
         aggregate broadcast back, never an unpartitioned window."""
         import pyspark.sql.functions as F
 
-        from pspcz_analyzer_spark.catalog import load_table
         from pspcz_analyzer_spark.functions.text import contains_normalized
         from pspcz_analyzer_spark.operators.pagination import page_offset
-        from pspcz_analyzer_spark.plans.voting import (
-            derive_mp_votes,
-            derive_void_votes,
-        )
 
         def build(page: int):
-            mp = derive_mp_votes(self.spark, self.sf_dir)
+            mp, void, _info = self._vote_tables()
             tallies = mp.groupBy("id_hlasovani").agg(
                 F.sum(F.when(F.col("vysledek") == "A", 1).otherwise(0)).alias("pro"),
                 F.sum(F.when(F.col("vysledek") == "B", 1).otherwise(0)).alias("proti"),
@@ -587,12 +648,8 @@ class QueryService:
                 F.sum(F.when(F.col("vysledek") == "F", 1).otherwise(0)).alias("nehlasoval"),
                 F.count(F.lit(1)).alias("prihlaseno"),
             )
-            cust = F.broadcast(
-                load_table(self.spark, self.sf_dir, "customer").select(
-                    "c_custkey", "c_name"
-                )
-            )
-            raw = load_table(self.spark, self.sf_dir, "orders")
+            cust = F.broadcast(self._table("customer").select("c_custkey", "c_name"))
+            raw = self._table("orders")
             orders = raw.join(
                 cust, raw.o_custkey == cust.c_custkey
             ).select(
@@ -607,7 +664,6 @@ class QueryService:
                     contains_normalized("nazev_dlouhy", search.strip())
                     | contains_normalized("nazev_kratky", search.strip())
                 )
-            void = derive_void_votes(self.spark, self.sf_dir)
             votes = (
                 orders.join(void, "id_hlasovani", "left_anti")
                 .join(tallies, "id_hlasovani")
@@ -619,11 +675,11 @@ class QueryService:
             if outcome:
                 votes = votes.filter(F.col("vysledek") == outcome)
             if topic:
-                li = load_table(self.spark, self.sf_dir, "lineitem").select(
+                li = self._table("lineitem").select(
                     F.col("l_orderkey").alias("id_hlasovani"), "l_partkey"
                 )
                 part = (
-                    load_table(self.spark, self.sf_dir, "part")
+                    self._table("part")
                     .filter(contains_normalized("p_type", topic))
                     .select("p_partkey")
                 )
@@ -870,8 +926,6 @@ class QueryService:
         import os as _os
         import time as _time
 
-        from pspcz_analyzer_spark.catalog import TESTDATA_TABLES
-
         sc = self.spark.sparkContext
         try:
             alive = not sc._jsc.sc().isStopped()
@@ -914,7 +968,8 @@ class QueryService:
             ),
             "manifest_versions": manifests,
             "cache": {
-                "entries": len(getattr(self.cache, "_store", {})),
+                "entries": len(self.cache),
+                "frames": len(self._frames),
                 "compute_calls": self.compute_calls,
             },
         }
@@ -925,14 +980,16 @@ class QueryService:
         if name not in fns:
             raise KeyError(f"unknown query: {name}")
         return self._cached(
-            f"query:{self.sf_dir}:{name}", lambda: fns[name](self.spark, self.sf_dir)
+            f"query:{self.sf_dir}:{name}", lambda: self._query_frame(name)
         )
 
     def sql(self, query: str, max_rows: int = 10_000) -> Rows:
         """Raw SQL over the registered testdata views (spark.sql) — the
         escape hatch for users who query with SQL strings rather than the
-        named catalog. Views register lazily once per service; results cap
-        at ``max_rows`` so an unbounded SELECT cannot flood the driver.
+        named catalog. The views are a base-frame registry entry over its
+        table scans, so they register again whenever the registry is
+        dropped or rebuilt for changed files; results cap at ``max_rows``
+        so an unbounded SELECT cannot flood the driver.
 
         CONTRACT: read-only. Only query statements (``SELECT`` / ``WITH``
         / ``VALUES`` / ``TABLE``, optionally parenthesized) execute;
@@ -956,8 +1013,6 @@ class QueryService:
            Command / ParsedStatement / DML / dynamic-SQL node — so the
            guard cannot desync from Spark's grammar the way a bespoke
            lexer can (r10's three in-round lexer fixes)."""
-        from pspcz_analyzer_spark.catalog import register_views
-
         legacy_escapes = (
             str(
                 self.spark.conf.get(
@@ -989,15 +1044,26 @@ class QueryService:
                 "the identifier if it is a column name"
             )
         classify_readonly_plan(self.spark, query)
-        if not getattr(self, "_views_ready", False):
-            register_views(self.spark, self.sf_dir)
-            self._views_ready = True
+
+        def register_views() -> tuple[str, ...]:
+            names = tuple(
+                t for t in TESTDATA_TABLES if os.path.exists(table_path(self.sf_dir, t))
+            )
+            for t in names:
+                self._table(t).createOrReplaceTempView(t)
+            return names
+
+        self._frame("views", register_views)
         df = self.spark.sql(query).limit(max_rows)
         return [r.asDict(recursive=True) for r in df.collect()]
 
     def invalidate(self, prefix: str = "") -> int:
-        """Data-refresh hook: drop cached results (optionally by prefix)."""
+        """Data-refresh hook: drop cached results (optionally by prefix);
+        a full drop also drops the base-frame registry, so the next miss
+        lists and reads the table files afresh."""
         if prefix:
             return self.cache.invalidate_prefix(prefix)
+        with self._frames_lock:
+            self._frames = {}
         self.cache.clear()
         return -1

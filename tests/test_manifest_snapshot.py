@@ -201,3 +201,26 @@ def test_adopted_ntz_timestamps_accept_their_own_data(
     assert _rows(got.filter("k = 2").select("ts")) == [
         (dt.datetime(2024, 1, 2, 8, 30),)
     ] * 2
+
+
+def test_datetime_bounds_prune_against_iso_stats(spark, tmp_path):
+    """Timestamp and date stats are stored as ISO strings; datetime and
+    date bounds must compare in that form instead of raising TypeError."""
+    m = {"files": ["a"], "stats": {"a": {"ts": ["2024-01-01T00:00:00", "2024-01-02T00:00:00", 0]}}}
+    assert M.prune_files_multi(
+        m, {"ts": (dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 3))}
+    ) == (["a"], 1)
+    assert M.prune_files_multi(m, {"ts": (dt.date(2024, 1, 3), dt.date(2024, 1, 9))}) == ([], 1)
+
+    df = spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 1 + i // 3, i % 3)) for i in range(12)],
+        "k long, ts timestamp_ntz",
+    )
+    path = str(tmp_path / "ts_stats")
+    write_range_sorted(df, path, "ts", num_partitions=4)
+    M.manifest_init(path, stat_cols=["ts"])
+    lo, hi = dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 2, 23)
+    kept, total = M.prune_files_multi(M.read_manifest(path), {"ts": (lo, hi)})
+    assert total == 4 and len(kept) == 1
+    got = M.scan_auto(spark, path, ranges={"ts": (lo, hi)})
+    assert sorted(r.k for r in got.collect()) == [3, 4, 5]

@@ -45,6 +45,31 @@ class TestTTLCache:
         assert c.get_or_compute("attendance:1", lambda: 99) == 3
         assert c.get_or_compute("loyalty:1", lambda: 42) == 42
 
+    def test_lru_bound(self):
+        from pspcz_analyzer_spark.serving.cache import MAX_ENTRIES
+
+        c = TTLCache(ttl_seconds=100)
+        for i in range(MAX_ENTRIES):
+            c.get_or_compute(f"k{i}", lambda i=i: i)
+        assert c.get_or_compute("k0", lambda: "recomputed") == 0  # hit
+        c.get_or_compute("overflow", lambda: -1)
+        assert len(c) == MAX_ENTRIES
+        assert c.get_or_compute("k0", lambda: "recomputed") == 0
+        assert c.get_or_compute("k1", lambda: "recomputed") == "recomputed"
+
+    def test_expired_entry_dropped_on_lookup(self):
+        clk = FakeClock()
+        c = TTLCache(ttl_seconds=10, clock=clk)
+        c.get_or_compute("k", lambda: "old")
+        clk.t = 10.1
+
+        def fail():
+            raise RuntimeError("query failed")
+
+        with pytest.raises(RuntimeError):
+            c.get_or_compute("k", fail)
+        assert len(c) == 0
+
 
 class TestQueryService:
     @pytest.fixture()

@@ -14,8 +14,10 @@ payload size).
 Startup warm-up (table touch + derived vote/steno fixture
 materialization — what a serving process does once at boot, and what
 the reference pays at its own ingest time) is timed separately as
-``startup_warm_sec``. Per endpoint: 1 cold call (empty TTL cache ->
-full Spark compute), then N warm calls (cache hits); reports cold sec
+``startup_warm_sec``. Per endpoint: 1 cold call (``invalidate()`` empties
+the TTL cache and drops the service's base-frame registry, so the call
+re-reads its tables and computes through Spark), then N warm calls
+(cache hits); reports cold sec
 + warm p50/p95 ms against the BASELINE.md budgets. Writes
 ``serving_latency_r11.json`` at the repo root (committed — the
 per-round artifact the verdict asked to sit next to the bench JSON)
@@ -96,7 +98,7 @@ def main() -> None:
 
     out: dict[str, dict] = {}
     for name, call in endpoints.items():
-        svc.invalidate()  # cold: every cache entry dropped
+        svc.invalidate()  # cold: every cache entry and base frame dropped
         t0 = time.time()
         call()
         cold = time.time() - t0
