@@ -1879,17 +1879,30 @@ def _to_physical(df: DataFrame, colmap: dict | None) -> DataFrame:
     )
 
 
-def _stage_rewrites(spark_df: DataFrame, path: str, prefix: str) -> list[str]:
+def _snapshot_colmap(path: str, m: "dict | None") -> dict:
+    """The column mapping staging applies: the operation's snapshot ``m``
+    when it has one — so a rename committed after the operation read its
+    version cannot re-map the batch — else the latest manifest's, and {}
+    before the table has a manifest (adoption paths)."""
+    if m is None:
+        try:
+            m = read_manifest(path)
+        except FileNotFoundError:
+            return {}
+    return m.get("colmap") or {}
+
+
+def _stage_rewrites(
+    spark_df: DataFrame, path: str, prefix: str, m: "dict | None" = None
+) -> list[str]:
     """Write a DataFrame as new uniquely-named data files INSIDE the table
     directory (additive — invisible to manifest readers until a commit
     references them). Returns the new basenames.
 
     Columns are staged under their PHYSICAL names (column mapping): the
-    current manifest's colmap applies to any input column it knows."""
-    try:
-        spark_df = _to_physical(spark_df, read_manifest(path).get("colmap"))
-    except FileNotFoundError:
-        pass  # pre-manifest staging (adoption paths)
+    colmap of the operation's snapshot ``m`` (see :func:`_snapshot_colmap`)
+    applies to any input column it knows."""
+    spark_df = _to_physical(spark_df, _snapshot_colmap(path, m))
     fs, rel = get_fs(path)
     stage_name = f".stage_{uuid.uuid4().hex[:8]}"
     # Spark writes through its own Hadoop connectors (any scheme); the
@@ -1977,17 +1990,18 @@ def append(
     _check_constraints(m, df)
     if txn is not None and (m.get("txns") or {}).get(txn[0], -1) >= txn[1]:
         return m["version"]  # replay: already applied
-    spec_cols = current_partition_spec(path)
     spec_cols = [
-        c for c in spec_cols if _parse_transform(c)[2] in df.columns
+        c for c in _partition_spec(m) if _parse_transform(c)[2] in df.columns
     ]
     if spec_cols:
         # The table has a partition spec: lay the batch out one partition
         # per file set and record each file's values in the manifest
         # (partition evolution — older files simply have no entries).
-        new_names, new_parts = _stage_partitioned(df, path, "append", spec_cols)
+        new_names, new_parts = _stage_partitioned(
+            df, path, "append", spec_cols, m
+        )
     else:
-        new_names = _stage_rewrites(df, path, "append")
+        new_names = _stage_rewrites(df, path, "append", m)
         new_parts = None
     fs, rel = get_fs(path)
     for attempt in range(max_commit_retries + 1):
@@ -2139,14 +2153,22 @@ def set_partition_spec(path: str, cols: "list[str]") -> int:
 def current_partition_spec(path: str, version: int | None = None) -> "list[str]":
     """The partition columns appends currently lay out by ([] if the
     table is unpartitioned or predates partition specs)."""
-    m = read_manifest(path, version)
+    return _partition_spec(read_manifest(path, version))
+
+
+def _partition_spec(m: dict) -> "list[str]":
+    """The partition columns of manifest snapshot ``m``'s current spec."""
     specs = m.get("specs") or []
     cur = m.get("current_spec")
     return list(specs[cur]) if cur is not None and cur < len(specs) else []
 
 
 def _stage_partitioned(
-    spark_df: DataFrame, path: str, prefix: str, cols: "list[str]"
+    spark_df: DataFrame,
+    path: str,
+    prefix: str,
+    cols: "list[str]",
+    m: dict,
 ) -> "tuple[list[str], dict]":
     """:func:`_stage_rewrites` honoring a partition spec: ONE write job
     partitionBy's STRING COPIES of the partition columns (so the data
@@ -2168,13 +2190,11 @@ def _stage_partitioned(
     for c, pc in zip(cols, pcols):
         staged = staged.withColumn(pc, _transform_expr(c))
     # Transforms are computed on LOGICAL names above; the data columns
-    # stage under their physical names (column mapping), like
-    # _stage_rewrites. Renamed partition-source columns are rejected at
-    # rename time, so the transform entries stay valid.
-    try:
-        cm = read_manifest(path).get("colmap") or {}
-    except FileNotFoundError:
-        cm = {}
+    # stage under their physical names in the operation's snapshot ``m``
+    # (column mapping), like _stage_rewrites. Renamed partition-source
+    # columns are rejected at rename time, so the transform entries stay
+    # valid.
+    cm = m.get("colmap") or {}
     if cm:
         staged = staged.select(
             *[F.col(c).alias(cm.get(c, c)) for c in staged.columns]
@@ -2978,7 +2998,7 @@ def delete_keys(
             dead.drop(ROW_ID_COL).withColumn(CDF_TYPE_COL, F.lit("delete")),
             path,
         )
-    new_names = _stage_rewrites(kept, path, "del")
+    new_names = _stage_rewrites(kept, path, "del", m)
     # Same alive-row accounting as delete_where: with pending merge-on-read
     # delete entries, footer counts would also bill rows already dead.
     rows_before = (
@@ -3093,14 +3113,14 @@ def replace_where(
         survivors = alive.filter(~pred)
         if rt:
             survivors = _materialize_ids(survivors)
-        new_names += _stage_rewrites(survivors, path, "replw")
+        new_names += _stage_rewrites(survivors, path, "replw", m)
         victims = set(affected)
         n_deleted = int(obs.get["n"] or 0)
     elif _cdf_on(m):
         cdf_names = _stage_changes(
             batch.withColumn(CDF_TYPE_COL, F.lit("insert")), path
         )
-    batch_names = _stage_rewrites(batch, path, "replw")
+    batch_names = _stage_rewrites(batch, path, "replw", m)
     n_inserted = sum(
         fs.parquet_file(os.path.join(rel, f)).metadata.num_rows
         for f in batch_names
@@ -3154,7 +3174,7 @@ def delete_where(
             .withColumn(CDF_TYPE_COL, F.lit("delete")),
             path,
         )
-    new_names = _stage_rewrites(kept, path, "delw")
+    new_names = _stage_rewrites(kept, path, "delw", m)
     rows_before = (
         int(obs.get["n"]) if obs is not None
         else _file_rows(m, fs, rel, affected)
@@ -3266,7 +3286,7 @@ def delete_where_pos(
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .select("__file", "__row")
     )
-    staged = _stage_rewrites(coords.coalesce(1), path, "posdel")
+    staged = _stage_rewrites(coords.coalesce(1), path, "posdel", m)
     matches = int(obs.get["n"])
     if not matches:
         return 0, 0
@@ -3359,9 +3379,9 @@ def update_where_pos(
             path,
         )
     [dv_name] = _stage_rewrites(
-        matched.select("__file", "__row").coalesce(1), path, "posdel"
+        matched.select("__file", "__row").coalesce(1), path, "posdel", m
     )
-    new_names = _stage_rewrites(updated, path, "updmor")
+    new_names = _stage_rewrites(updated, path, "updmor", m)
     entry = {"file": dv_name, "kind": "pos", "seq": new_v}
     new_files = m["files"] + new_names
     _commit(
@@ -3465,7 +3485,7 @@ def update_where(
                         "sources and let the expression recompute, or set "
                         "both consistently"
                     )
-    new_names = _stage_rewrites(out, path, "updw")
+    new_names = _stage_rewrites(out, path, "updw", m)
     n_updated = int(obs.get["n"] or 0)
     # UPDATE commutes with a concurrent APPEND exactly like DELETE does
     # (the appended rows arrived "after" this statement); anything that
@@ -3504,7 +3524,7 @@ def delete_keys_mor(
         [(k,) for k in keys],
         load_manifest_table(spark, path).select(key_col).schema,
     ).distinct()
-    [name] = _stage_rewrites(keys_df.coalesce(1), path, "eqdel")
+    [name] = _stage_rewrites(keys_df.coalesce(1), path, "eqdel", m)
     entry = {"file": name, "key_col": _physical_col(m, key_col), "seq": new_v}
     return _commit(
         path, m, deletes=(m.get("deletes") or []) + [entry], op="DELETE",
@@ -3624,7 +3644,7 @@ def materialize_deletes(spark: SparkSession, path: str) -> "tuple[int, int]":
         )
         if _row_tracking_on(m):
             rewritten = _materialize_ids(rewritten)
-        new_names = _stage_rewrites(rewritten, path, "matdel")
+        new_names = _stage_rewrites(rewritten, path, "matdel", m)
     new_files = [f for f in m["files"] if f not in set(victims)] + new_names
     _commit(
         path, m, new_files, deletes=None,
@@ -3720,10 +3740,10 @@ def upsert(
         )
         if rt:
             kept = _materialize_ids(kept)
-        new_names += _stage_rewrites(kept, path, "upsert")
+        new_names += _stage_rewrites(kept, path, "upsert", m)
         victims = set(affected)
     keys_df.unpersist()
-    new_names += _stage_rewrites(batch, path, "upsert")
+    new_names += _stage_rewrites(batch, path, "upsert", m)
     new_files = [f for f in m["files"] if f not in victims] + new_names
     return _commit(
         path, m, new_files, txns=txns, schema=schema, cdf_files=cdf_names,
@@ -4098,7 +4118,7 @@ def merge_into(
         or (batch is not None and bool(m.get("constraints")))
     )
     if batch is not None and not counts_known:
-        new_names = _stage_rewrites(batch, path, "merge")
+        new_names = _stage_rewrites(batch, path, "merge", m)
     if merge_obs is not None:
         vals = merge_obs.get
         n_deleted = int(vals["d"] or 0)
@@ -4110,7 +4130,7 @@ def merge_into(
         and n_nms_upd == 0 and n_nms_del == 0
     )
     if batch is not None and counts_known and not no_change:
-        new_names = _stage_rewrites(batch, path, "merge")
+        new_names = _stage_rewrites(batch, path, "merge", m)
     if no_change:
         # Candidate files held no row matching any clause (stats are an
         # over-approximation): the staged survivors are byte-identical
@@ -4307,7 +4327,7 @@ def scd2_merge(
         )
         if _row_tracking_on(m):
             rewritten = _materialize_ids(rewritten)
-        new_names += _stage_rewrites(rewritten, path, "scd2close")
+        new_names += _stage_rewrites(rewritten, path, "scd2close", m)
         victims = set(affected)
     inserts = to_insert.select(
         F.col(key_col),
@@ -4316,7 +4336,7 @@ def scd2_merge(
         F.lit(None).cast("date").alias(SCD2_VALID_TO),
         F.lit(True).alias(SCD2_CURRENT),
     ).select(*schema_cols)
-    new_names += _stage_rewrites(inserts, path, "scd2ins")
+    new_names += _stage_rewrites(inserts, path, "scd2ins", m)
     new_files = [f for f in m["files"] if f not in victims] + new_names
     _commit(path, m, new_files, op="MERGE")
     keys_df.unpersist()
@@ -4427,7 +4447,7 @@ def compact_small_files(
             ).coalesce(1)
             if _row_tracking_on(m):
                 out = _materialize_ids(out)
-            staged = _stage_rewrites(out, path, "compact")
+            staged = _stage_rewrites(out, path, "compact", m)
             new_names += staged
             merged += b
             if cluster_wm is not None and all(
@@ -4520,7 +4540,7 @@ def _optimize_layout(
     )
     if rt:
         out = _materialize_ids(out)
-    new_names = _stage_rewrites(out, path, "zorder")
+    new_names = _stage_rewrites(out, path, "zorder", m)
     # A full re-lay RESETS the incremental-clustering state: the spec
     # becomes these columns and the watermark the new commit (so a later
     # optimize_clustered clusters only post-re-lay arrivals instead of
@@ -4598,7 +4618,7 @@ def optimize_clustered(
     )
     if rt:
         out = _materialize_ids(out)
-    new_names = _stage_rewrites(out, path, "cluster")
+    new_names = _stage_rewrites(out, path, "cluster", m)
     fs, rel = get_fs(path)
     victims = set(pending)
     new_files = [f for f in m["files"] if f not in victims] + new_names
@@ -5113,7 +5133,7 @@ def stage_append(df: DataFrame, path: str, ref: str) -> int:
     if not safe or safe != ref:
         raise ValueError(f"staged ref must be [-_a-zA-Z0-9]+, got {ref!r}")
     fs, rel = get_fs(path)
-    names = _stage_rewrites(df, path, f"wap-{ref}")
+    names = _stage_rewrites(df, path, f"wap-{ref}", m)
     d = _staged_dir(rel)
     fs.makedirs(d)
     doc = {

@@ -112,20 +112,15 @@ def sparse_cosine_pairs(
     )
 
 
-def mp_cosine_pairs(
-    mp_votes: DataFrame,
-    void_votes: DataFrame,
-    mp_info: DataFrame,
-    k: int | None = 20,
-    cross_party_only: bool = True,
+def mp_cosine_pair_table(
+    mp_votes: DataFrame, void_votes: DataFrame, mp_info: DataFrame
 ) -> DataFrame:
-    """Top-k most-similar MP pairs by vote-vector cosine, cross-party only
-    (similarity_service.py:75-108), via the sparse-join formulation."""
-    from pspcz_analyzer_spark.operators.pagination import top_k
-
+    """Every MP pair sharing a vote, (id_a, id_b, group_a, group_b,
+    cosine_sim) with id_a < id_b: the parameter-free part of
+    :func:`mp_cosine_pairs`, which :func:`top_pairs` ranks."""
     pairs = sparse_cosine_pairs(vote_entries(mp_votes, void_votes))
     info = F.broadcast(mp_info.select("id_poslanec", "party"))
-    out = (
+    return (
         pairs.join(
             info.select(F.col("id_poslanec").alias("id_a"), F.col("party").alias("group_a")),
             "id_a",
@@ -136,11 +131,35 @@ def mp_cosine_pairs(
         )
         .select("id_a", "id_b", "group_a", "group_b", "cosine_sim")
     )
+
+
+def top_pairs(
+    pairs: DataFrame, k: int | None = 20, cross_party_only: bool = True
+) -> DataFrame:
+    """Cross-party filter and top-k (cosine desc, ids asc — a total order)
+    over :func:`mp_cosine_pair_table`; ``k`` falsy keeps every pair."""
+    from pspcz_analyzer_spark.operators.pagination import top_k
+
+    out = pairs
     if cross_party_only:
         out = out.filter(F.col("group_a") != F.col("group_b"))
     if not k:
         return out
     return top_k(out, [F.desc("cosine_sim"), F.asc("id_a"), F.asc("id_b")], k)
+
+
+def mp_cosine_pairs(
+    mp_votes: DataFrame,
+    void_votes: DataFrame,
+    mp_info: DataFrame,
+    k: int | None = 20,
+    cross_party_only: bool = True,
+) -> DataFrame:
+    """Top-k most-similar MP pairs by vote-vector cosine, cross-party only
+    (similarity_service.py:75-108), via the sparse-join formulation."""
+    return top_pairs(
+        mp_cosine_pair_table(mp_votes, void_votes, mp_info), k, cross_party_only
+    )
 
 
 def pca_coords(

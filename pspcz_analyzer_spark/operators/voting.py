@@ -85,14 +85,12 @@ def active_with_direction(
     ).withColumn("is_rebellion", F.col("vysledek") != F.col("party_direction"))
 
 
-def loyalty(
-    mp_votes: DataFrame,
-    void_votes: DataFrame,
-    mp_info: DataFrame,
-    top: int | None = None,
-    party_filter: str | None = None,
+def loyalty_stats(
+    mp_votes: DataFrame, void_votes: DataFrame, mp_info: DataFrame
 ) -> DataFrame:
-    """Rebellion rate per MP, descending (loyalty_service.py:9-141)."""
+    """Per-MP rebellion counts and pct joined with mp_info, unordered: the
+    parameter-free part of :func:`loyalty`, which a server can build once
+    and rank per request with :func:`rank_loyalty`."""
     flagged = active_with_direction(mp_votes, void_votes, mp_info)
     per_mp = flagged.groupBy("id_poslanec").agg(
         _cnt(F.col("is_rebellion")).alias("rebellions"),
@@ -102,7 +100,14 @@ def loyalty(
         "rebellion_pct",
         F.round(F.col("rebellions") / F.col("active_votes") * 100, 6),
     )
-    out = per_mp.join(F.broadcast(mp_info), "id_poslanec", "left")
+    return per_mp.join(F.broadcast(mp_info), "id_poslanec", "left")
+
+
+def rank_loyalty(
+    stats: DataFrame, top: int | None = None, party_filter: str | None = None
+) -> DataFrame:
+    """Party filter, rebellion-rate order and top-n over :func:`loyalty_stats`."""
+    out = stats
     if party_filter:
         out = out.filter(F.upper(F.col("party")) == party_filter.upper())
     out = out.orderBy(
@@ -116,15 +121,25 @@ def loyalty(
     )
 
 
-def attendance(
+def loyalty(
     mp_votes: DataFrame,
     void_votes: DataFrame,
     mp_info: DataFrame,
     top: int | None = None,
-    sort: str = "worst",
     party_filter: str | None = None,
 ) -> DataFrame:
-    """Attendance categories + pct per MP (attendance_service.py:9-82)."""
+    """Rebellion rate per MP, descending (loyalty_service.py:9-141)."""
+    return rank_loyalty(
+        loyalty_stats(mp_votes, void_votes, mp_info), top, party_filter
+    )
+
+
+def attendance_stats(
+    mp_votes: DataFrame, void_votes: DataFrame, mp_info: DataFrame
+) -> DataFrame:
+    """Per-MP attendance category counts and pct joined with mp_info,
+    unordered: the parameter-free part of :func:`attendance`, ranked per
+    request by :func:`rank_attendance`."""
     clean = exclude_void(mp_votes, void_votes)
     v = F.col("vysledek")
     per_mp = clean.groupBy("id_poslanec").agg(
@@ -144,22 +159,35 @@ def attendance(
             6,
         ),
     )
-    out = per_mp.join(F.broadcast(mp_info), "id_poslanec", "left")
+    return per_mp.join(F.broadcast(mp_info), "id_poslanec", "left")
+
+
+# sort name -> (column, descending); unknown names sort like "worst".
+ATTENDANCE_SORTS: dict[str, tuple[str, bool]] = {
+    "worst": ("attendance_pct", False),
+    "best": ("attendance_pct", True),
+    "most_active": ("active", True),
+    "least_active": ("active", False),
+    "most_abstained": ("abstained", True),
+    "most_excused": ("excused", True),
+    "most_passive": ("passive", True),
+    "most_absent": ("absent", True),
+    "most_yes": ("yes_votes", True),
+    "most_no": ("no_votes", True),
+}
+
+
+def rank_attendance(
+    stats: DataFrame,
+    top: int | None = None,
+    sort: str = "worst",
+    party_filter: str | None = None,
+) -> DataFrame:
+    """Party filter, ``sort`` order and top-n over :func:`attendance_stats`."""
+    out = stats
     if party_filter:
         out = out.filter(F.upper(F.col("party")) == party_filter.upper())
-    sort_config: dict[str, tuple[str, bool]] = {
-        "worst": ("attendance_pct", False),
-        "best": ("attendance_pct", True),
-        "most_active": ("active", True),
-        "least_active": ("active", False),
-        "most_abstained": ("abstained", True),
-        "most_excused": ("excused", True),
-        "most_passive": ("passive", True),
-        "most_absent": ("absent", True),
-        "most_yes": ("yes_votes", True),
-        "most_no": ("no_votes", True),
-    }
-    col, desc = sort_config.get(sort, ("attendance_pct", False))
+    col, desc = ATTENDANCE_SORTS.get(sort, ATTENDANCE_SORTS["worst"])
     order = F.desc(col) if desc else F.asc(col)
     out = out.orderBy(order, F.asc("id_poslanec"))
     if top:
@@ -168,6 +196,20 @@ def attendance(
         "id_poslanec", "jmeno", "prijmeni", "party",
         "active", "yes_votes", "no_votes", "abstained",
         "passive", "absent", "excused", "attendance_pct",
+    )
+
+
+def attendance(
+    mp_votes: DataFrame,
+    void_votes: DataFrame,
+    mp_info: DataFrame,
+    top: int | None = None,
+    sort: str = "worst",
+    party_filter: str | None = None,
+) -> DataFrame:
+    """Attendance categories + pct per MP (attendance_service.py:9-82)."""
+    return rank_attendance(
+        attendance_stats(mp_votes, void_votes, mp_info), top, sort, party_filter
     )
 
 

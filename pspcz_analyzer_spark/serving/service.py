@@ -14,9 +14,28 @@ a miss pays neither a file listing nor a schema-inference job before its
 own work. A reused frame pins its file listing — after a Parquet file is
 replaced it reads wrong rows with no error — so the registry has two
 freshness rules: ``invalidate()`` (a data refresh) drops it, and every
-lookup compares a fingerprint of the table files (name, size, mtime_ns)
-with the one taken when the frames were built and rebuilds them when the
-files changed. The ``sql()`` views are a registry entry too.
+miss compares a fingerprint of the table files (name, size, mtime_ns)
+with the one taken when the frames were built and starts a new registry
+generation when the files changed. The ``sql()`` views are a registry
+entry too, over the raw scans.
+
+Each analysis endpoint splits into a parameter-free **aggregate** (per-MP
+loyalty or attendance stats, the MP pair table, the votes listing with
+its tallies, ...) and a **tail** (filter, order, top-k or page, and the
+broadcast hit count). The aggregate is a registry entry materialized once
+per generation, so a cache miss runs only its tail over in-memory rows,
+never the joins and aggregates behind them. Materialization is ``localCheckpoint``: the frame's rows
+are stored as executor blocks (MEMORY_AND_DISK) and its lineage is cut.
+It is deliberately not ``persist()``: Spark's CacheManager substitutes a
+persisted plan into ANY matching plan of the session, so after a data
+refresh an unrelated ``V.loyalty(derive_*(...))`` over the same paths
+would read the old aggregate with no error; a local checkpoint is only
+reachable through the frame that holds it. Having no lineage, its blocks
+cannot be recomputed, so a generation's blocks are released only when it
+is dropped AND its last in-flight miss has returned (a miss pins the
+generation it started in); the losing build of a race is released at
+once, and a materialization that fails or is cancelled by the budget
+releases its blocks before the error propagates.
 """
 
 from __future__ import annotations
@@ -25,6 +44,7 @@ import os
 import re
 import threading
 from collections.abc import Callable
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -243,6 +263,35 @@ class QueryTimeoutError(TimeoutError):
     timeout contract (routes/voting.py:39,64: 15 s else 503)."""
 
 
+class _Generation:
+    """One registry generation: the frames built for one fingerprint of the
+    table files, the ids of the RDDs holding the blocks of those it
+    materialized, and the number of cache misses using it."""
+
+    def __init__(self, fp: tuple | None):
+        self.fp = fp
+        self.frames: dict[str, Any] = {}
+        self.rdd_ids: list[int] = []
+        self.users = 0
+        self.dropped = False
+
+
+def _local_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` computed once into executor blocks (MEMORY_AND_DISK, lineage
+    cut) and the id of the RDD that holds them. The checkpoint is taken
+    lazily and then counted — what ``localCheckpoint(eager=True)`` does —
+    so the RDD is known before its job runs, and a count that fails or is
+    cancelled releases the blocks it already stored."""
+    cp = df.localCheckpoint(eager=False)
+    rdd = cp._jdf.queryExecution().analyzed().rdd()
+    try:
+        rdd.count()
+    except BaseException:
+        rdd.unpersist(False)
+        raise
+    return cp, rdd.id()
+
+
 class QueryService:
     def __init__(
         self,
@@ -258,31 +307,87 @@ class QueryService:
         self.cache = TTLCache(ttl_seconds, **kwargs)
         self.compute_calls = 0  # observability: cache-miss counter
         self.budget_seconds = budget_seconds
-        # Base-frame registry: name -> frame, valid for the table files
-        # whose fingerprint is _frames_fp (see _frame).
-        self._frames: dict[str, Any] = {}
-        self._frames_fp: tuple | None = None
+        # Base-frame registry (see _frame); _pin.gen is the generation the
+        # calling thread's cache miss started in.
+        self._gen = _Generation(None)
         self._frames_lock = threading.Lock()
+        self._pin = threading.local()
 
-    def _frame(self, name: str, build: Callable[[], Any]) -> Any:
-        """Registry entry ``name``: ``build()``'s result, built on first use
-        and shared by every later cache miss until ``invalidate()`` drops
-        the registry or the table files' fingerprint changes."""
+    def _unpersist(self, rdd_ids: list[int]) -> None:
+        if not rdd_ids:
+            return
+        rdds = self.spark.sparkContext._jsc.getPersistentRDDs()
+        for i in rdd_ids:
+            rdd = rdds.get(i)
+            if rdd is not None:
+                rdd.unpersist(False)
+
+    def _drop_locked(self, gen: _Generation) -> list[int]:
+        """Mark ``gen`` dropped; the RDD ids to release now, which are none
+        while a miss still uses it (the last one releases them)."""
+        gen.dropped = True
+        if gen.users:
+            return []
+        ids, gen.rdd_ids = gen.rdd_ids, []
+        return ids
+
+    @contextmanager
+    def _generation(self):
+        """Pin the registry generation for the calling thread: the current
+        one, replaced first if the table files' fingerprint changed. A
+        nested call (a lookup inside a miss) reuses the outer pin."""
+        gen = getattr(self._pin, "gen", None)
+        if gen is not None:
+            yield gen
+            return
         fp = _table_fingerprint(self.sf_dir)
         with self._frames_lock:
-            if fp != self._frames_fp:
-                self._frames, self._frames_fp = {}, fp
-            frames = self._frames
-            if name in frames:
-                return frames[name]
-        # Built outside the lock, like TTLCache.compute: a slow build (the
-        # steno fixture behind amendments_merged) must not stall every
-        # other miss; a duplicate build on a race is dropped.
-        value = build()
-        with self._frames_lock:
-            if frames is self._frames:  # registry not dropped meanwhile
-                value = frames.setdefault(name, value)
-        return value
+            released = []
+            if fp != self._gen.fp:
+                released = self._drop_locked(self._gen)
+                self._gen = _Generation(fp)
+            gen = self._gen
+            gen.users += 1
+        self._unpersist(released)
+        self._pin.gen = gen
+        try:
+            yield gen
+        finally:
+            self._pin.gen = None
+            with self._frames_lock:
+                gen.users -= 1
+                released = self._drop_locked(gen) if gen.dropped else []
+            self._unpersist(released)
+
+    def _frame(
+        self, name: str, build: Callable[[], Any], materialize: bool = False
+    ) -> Any:
+        """Registry entry ``name``: ``build()``'s result (materialized with
+        :func:`_local_checkpoint` when ``materialize``), built on first use
+        and shared by every later cache miss of the same generation."""
+        with self._generation() as gen:
+            with self._frames_lock:
+                if name in gen.frames:
+                    return gen.frames[name]
+            # Built outside the lock, like TTLCache.compute: a slow build
+            # (the steno fixture behind amendments_merged) must not stall
+            # every other miss. A duplicate build on a race is dropped; one
+            # that lands in a generation dropped meanwhile is released with it.
+            value, rdd_id = build(), None
+            if materialize:
+                value, rdd_id = _local_checkpoint(value)
+            with self._frames_lock:
+                kept = gen.frames.setdefault(name, value)
+                if kept is value and rdd_id is not None:
+                    gen.rdd_ids.append(rdd_id)
+            if kept is not value and rdd_id is not None:
+                self._unpersist([rdd_id])
+            return kept
+
+    def _aggregate(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """A parameter-free endpoint aggregate, materialized once per
+        registry generation; cache misses run only their tail over it."""
+        return self._frame(f"agg:{name}", build, materialize=True)
 
     def _table(self, name: str) -> DataFrame:
         return self._frame(
@@ -360,18 +465,27 @@ class QueryService:
     def _cached(self, key: str, df_fn) -> Rows:
         def compute() -> Rows:
             self.compute_calls += 1
-            return self._collect_budgeted(df_fn)
+            # The generation stays pinned until the rows are collected, so
+            # the blocks of its aggregates outlive a concurrent refresh.
+            with self._generation():
+                return self._collect_budgeted(df_fn)
 
         return self.cache.get_or_compute(key, compute)
 
     # -- analysis endpoints (route semantics of routes/voting.py) --
+    #
+    # Each endpoint's miss is its tail over a materialized aggregate (see
+    # the module docstring); the catalog queries run the same operators
+    # unsplit (V.loyalty = V.rank_loyalty over V.loyalty_stats, ...).
 
     def loyalty(self, top: int | None = 30, party: str | None = None) -> Rows:
         key = f"loyalty:{self.sf_dir}:{top}:{party}"
         return self._cached(
             key,
-            lambda: V.loyalty(
-                *self._vote_tables(),
+            lambda: V.rank_loyalty(
+                self._aggregate(
+                    "loyalty", lambda: V.loyalty_stats(*self._vote_tables())
+                ),
                 top=top,
                 party_filter=party,
             ),
@@ -383,8 +497,10 @@ class QueryService:
         key = f"attendance:{self.sf_dir}:{sort}:{top}:{party}"
         return self._cached(
             key,
-            lambda: V.attendance(
-                *self._vote_tables(),
+            lambda: V.rank_attendance(
+                self._aggregate(
+                    "attendance", lambda: V.attendance_stats(*self._vote_tables())
+                ),
                 top=top,
                 sort=sort,
                 party_filter=party,
@@ -393,54 +509,68 @@ class QueryService:
 
     def similarity(self, top: int | None = 20, cross_party_only: bool = True) -> Rows:
         """Top-k most-similar MP pairs (routes/voting.py:73-91 semantics),
-        sparse-join cosine — the 30 s-budget endpoint in the reference."""
-        from pspcz_analyzer_spark.operators.similarity import mp_cosine_pairs
+        sparse-join cosine — the 30 s-budget endpoint in the reference. A
+        miss is one top-k over the materialized pair table, whatever its
+        ``top``."""
+        from pspcz_analyzer_spark.operators.similarity import (
+            mp_cosine_pair_table,
+            top_pairs,
+        )
 
         key = f"similarity:{self.sf_dir}:{top}:{cross_party_only}"
         return self._cached(
             key,
-            lambda: mp_cosine_pairs(
-                *self._vote_tables(),
+            lambda: top_pairs(
+                self._aggregate(
+                    "similarity",
+                    lambda: mp_cosine_pair_table(*self._vote_tables()),
+                ),
                 k=top,
                 cross_party_only=cross_party_only,
             ),
         )
 
-    def vote_detail(self, vote_id: int) -> Rows:
-        """Per-MP detail rows for one vote with party/vote tallies attached
-        (the §3.2 lifecycle, votes_service.py:303-319) — point filter pushed
-        to the scan, broadcast dims, windows over the one-vote rows."""
+    def _vote_detail_table(self) -> DataFrame:
+        """Every (MP, vote) row with its name, party and the per-(vote,
+        party) and per-vote tallies (the §3.2 lifecycle,
+        votes_service.py:303-319): the aggregate behind vote_detail."""
         import pyspark.sql.functions as F
         from pyspark.sql import Window
 
-        def build():
-            mp, _void, info = self._vote_tables()
-            one = mp.filter(F.col("id_hlasovani") == vote_id)
-            info = F.broadcast(info.select("id_poslanec", "jmeno", "party"))
-            # Tallies partition by (vote id, party) / vote id — constant
-            # after the point filter, so no global single-partition window.
-            pw = Window.partitionBy("id_hlasovani", "party")
-            vw = Window.partitionBy("id_hlasovani")
-            return (
-                one.join(info, "id_poslanec")
-                .select(
-                    "id_poslanec",
-                    "jmeno",
-                    "party",
-                    "vysledek",
-                    F.sum(F.when(F.col("vysledek") == "A", 1).otherwise(0))
-                    .over(pw)
-                    .alias("party_yes"),
-                    F.sum(F.when(F.col("vysledek") == "B", 1).otherwise(0))
-                    .over(pw)
-                    .alias("party_no"),
-                    F.count(F.lit(1)).over(pw).alias("party_total"),
-                    F.count(F.lit(1)).over(vw).alias("vote_total"),
-                )
-                .orderBy("id_poslanec")
-            )
+        mp, _void, info = self._vote_tables()
+        info = F.broadcast(info.select("id_poslanec", "jmeno", "party"))
+        pw = Window.partitionBy("id_hlasovani", "party")
+        vw = Window.partitionBy("id_hlasovani")
+        return mp.join(info, "id_poslanec").select(
+            "id_hlasovani",
+            "id_poslanec",
+            "jmeno",
+            "party",
+            "vysledek",
+            F.sum(F.when(F.col("vysledek") == "A", 1).otherwise(0))
+            .over(pw)
+            .alias("party_yes"),
+            F.sum(F.when(F.col("vysledek") == "B", 1).otherwise(0))
+            .over(pw)
+            .alias("party_no"),
+            F.count(F.lit(1)).over(pw).alias("party_total"),
+            F.count(F.lit(1)).over(vw).alias("vote_total"),
+        )
 
-        return self._cached(f"vote:{self.sf_dir}:{vote_id}", build)
+    def vote_detail(self, vote_id: int) -> Rows:
+        """Per-MP detail rows for one vote with party/vote tallies attached:
+        a point filter over the materialized per-vote tally table. An MP
+        may hold several rows of one vote; ordering by the vote code too
+        makes the row order total (rows equal on both are identical)."""
+        import pyspark.sql.functions as F
+
+        return self._cached(
+            f"vote:{self.sf_dir}:{vote_id}",
+            lambda: self._aggregate("vote_detail", self._vote_detail_table)
+            .filter(F.col("id_hlasovani") == vote_id)
+            .drop("id_hlasovani")
+            .orderBy("id_poslanec", "vysledek"),
+        )
 
     def laws(
         self,
@@ -452,27 +582,34 @@ class QueryService:
     ) -> Rows:
         """Laws-listing composite (law_service.py:160-187): optional status/
         topic filters + normalized name search + total-hit count + offset
-        page, one plan per call."""
+        page over the materialized ``orders ⋈ customer`` listing."""
         import pyspark.sql.functions as F
 
         from pspcz_analyzer_spark.functions.text import contains_normalized
         from pspcz_analyzer_spark.operators.pagination import page_offset
 
-        def build():
-            hits = self._table("orders")
+        def listing() -> DataFrame:
+            orders = self._table("orders")
             cust = self._table("customer").select("c_custkey", "c_name")
+            return orders.join(
+                F.broadcast(cust), orders.o_custkey == cust.c_custkey
+            ).select(
+                "o_orderkey",
+                "o_orderdate",
+                "o_orderpriority",
+                "c_name",
+                "o_orderstatus",
+            )
+
+        def build():
+            hits = self._aggregate("laws", listing)
             if status is not None:
                 hits = hits.filter(F.col("o_orderstatus") == status)
             if priorities:
                 hits = hits.filter(F.col("o_orderpriority").isin(*priorities))
-            hits = hits.join(
-                F.broadcast(cust), hits.o_custkey == cust.c_custkey
-            )
             if search:
                 hits = hits.filter(contains_normalized("c_name", search))
-            hits = hits.select(
-                "o_orderkey", "o_orderdate", "o_orderpriority", "c_name"
-            )
+            hits = hits.drop("o_orderstatus")
             # Scalar count + one-row broadcast, not an unpartitioned window:
             # a popular search term must not funnel every hit through one task.
             total = hits.agg(F.count(F.lit(1)).alias("total_hits"))
@@ -494,7 +631,7 @@ class QueryService:
         self, search: str = "", page: int = 1, per_page: int = 20
     ) -> Rows:
         """Amendments listing (routes/amendments.py:21-47 param shape:
-        ``?search=&page=``): the merged steno+letter table, optionally
+        ``?search=&page=``): the materialized steno+letter table, optionally
         filtered by a diacritic-folded submitter search, offset-paged.
         Each row carries ``total_hits`` from a broadcast scalar count —
         the same shape as :meth:`laws`, never an unpartitioned window."""
@@ -504,7 +641,9 @@ class QueryService:
         from pspcz_analyzer_spark.operators.pagination import page_offset
 
         def build():
-            df = self._query_frame("amendments_merged")
+            df = self._aggregate(
+                "amendments", lambda: self._query_frame("amendments_merged")
+            )
             if search:
                 df = df.filter(contains_normalized("submitters", search))
             total = df.agg(F.count(F.lit(1)).alias("total_hits"))
@@ -629,17 +768,18 @@ class QueryService:
         first and offset-paged with a total-hit count. Returns the
         reference's page dict: rows/total/page/per_page/total_pages.
 
-        Plan shape at scale: tallies are ONE map-side-combined aggregate
-        over mp_votes; the void exclusion is an anti-join against the
-        (small) void list; the topic filter is a semi-join whose part
-        side is filtered before the join; the hit count is a scalar
-        aggregate broadcast back, never an unpartitioned window."""
+        Plan shape: the materialized listing holds every non-void vote
+        with its tallies (ONE map-side-combined aggregate over mp_votes,
+        the void exclusion an anti-join against the small void list), and
+        a materialized (id_hlasovani, p_type) map serves the topic
+        semi-join; a miss filters, counts (a scalar aggregate broadcast
+        back, never an unpartitioned window) and pages them."""
         import pyspark.sql.functions as F
 
         from pspcz_analyzer_spark.functions.text import contains_normalized
         from pspcz_analyzer_spark.operators.pagination import page_offset
 
-        def build(page: int):
+        def listing() -> DataFrame:
             mp, void, _info = self._vote_tables()
             tallies = mp.groupBy("id_hlasovani").agg(
                 F.sum(F.when(F.col("vysledek") == "A", 1).otherwise(0)).alias("pro"),
@@ -658,13 +798,7 @@ class QueryService:
                 F.coalesce(F.col("c_name"), F.lit("")).alias("nazev_dlouhy"),
                 F.col("o_orderpriority").alias("nazev_kratky"),
             )
-            if search and search.strip():
-                # Pushed to the orders scan BEFORE the tally join.
-                orders = orders.filter(
-                    contains_normalized("nazev_dlouhy", search.strip())
-                    | contains_normalized("nazev_kratky", search.strip())
-                )
-            votes = (
+            return (
                 orders.join(void, "id_hlasovani", "left_anti")
                 .join(tallies, "id_hlasovani")
                 .withColumn(
@@ -672,21 +806,31 @@ class QueryService:
                     F.when(F.col("pro") > F.col("proti"), "A").otherwise("R"),
                 )
             )
+
+        def topic_map() -> DataFrame:
+            """(id_hlasovani, p_type) of every part an order touches."""
+            li = self._table("lineitem")
+            part = self._table("part").select("p_partkey", "p_type")
+            return (
+                li.join(part, li.l_partkey == part.p_partkey)
+                .select(F.col("l_orderkey").alias("id_hlasovani"), "p_type")
+                .distinct()
+            )
+
+        def build(page: int):
+            votes = self._aggregate("votes", listing)
+            if search and search.strip():
+                votes = votes.filter(
+                    contains_normalized("nazev_dlouhy", search.strip())
+                    | contains_normalized("nazev_kratky", search.strip())
+                )
             if outcome:
                 votes = votes.filter(F.col("vysledek") == outcome)
             if topic:
-                li = self._table("lineitem").select(
-                    F.col("l_orderkey").alias("id_hlasovani"), "l_partkey"
-                )
-                part = (
-                    self._table("part")
-                    .filter(contains_normalized("p_type", topic))
-                    .select("p_partkey")
-                )
                 topical = (
-                    li.join(part, li.l_partkey == part.p_partkey, "left_semi")
+                    self._aggregate("votes_topics", topic_map)
+                    .filter(contains_normalized("p_type", topic))
                     .select("id_hlasovani")
-                    .distinct()
                 )
                 votes = votes.join(topical, "id_hlasovani", "left_semi")
             total = votes.agg(F.count(F.lit(1)).alias("total_hits"))
@@ -969,10 +1113,24 @@ class QueryService:
             "manifest_versions": manifests,
             "cache": {
                 "entries": len(self.cache),
-                "frames": len(self._frames),
+                "frames": len(self._gen.frames),
+                "materialized": self._materialized(),
                 "compute_calls": self.compute_calls,
             },
         }
+
+    def _materialized(self) -> dict:
+        """Count and stored bytes (memory + disk, from the block manager's
+        storage info — no job runs) of the current generation's
+        materialized aggregates."""
+        with self._frames_lock:
+            ids = set(self._gen.rdd_ids)
+        nbytes = 0
+        if ids:
+            for info in self.spark.sparkContext._jsc.sc().getRDDStorageInfo():
+                if info.id() in ids:
+                    nbytes += info.memSize() + info.diskSize()
+        return {"frames": len(ids), "bytes": nbytes}
 
     def query(self, name: str) -> Rows:
         """Any registered catalog query by name (the generic endpoint)."""
@@ -1060,10 +1218,14 @@ class QueryService:
     def invalidate(self, prefix: str = "") -> int:
         """Data-refresh hook: drop cached results (optionally by prefix);
         a full drop also drops the base-frame registry, so the next miss
-        lists and reads the table files afresh."""
+        lists and reads the table files afresh. The dropped generation's
+        materialized blocks are released now, or by its last in-flight
+        miss when it returns."""
         if prefix:
             return self.cache.invalidate_prefix(prefix)
         with self._frames_lock:
-            self._frames = {}
+            released = self._drop_locked(self._gen)
+            self._gen = _Generation(self._gen.fp)
+        self._unpersist(released)
         self.cache.clear()
         return -1

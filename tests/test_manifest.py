@@ -2087,8 +2087,8 @@ class TestAppendCommitRetry:
         real_stage = M._stage_rewrites
         staged: dict = {}
 
-        def stage_and_race(df, path, prefix):
-            names = real_stage(df, path, prefix)
+        def stage_and_race(df, path, prefix, *snapshot):
+            names = real_stage(df, path, prefix, *snapshot)
             staged["names"] = list(names)
             staged.setdefault("calls", 0)
             staged["calls"] += 1

@@ -1,13 +1,16 @@
 """One snapshot per manifest operation: scans plan and read the version
-they read once, even when a commit lands mid-plan; metadata-only commits
+they read once, even when a commit lands mid-plan; DML stages under the
+column mapping of the version it read; metadata-only commits
 carry every field they do not own; adopted Parquet timestamps keep the
 type Spark reads them back as."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -224,3 +227,87 @@ def test_datetime_bounds_prune_against_iso_stats(spark, tmp_path):
     assert total == 4 and len(kept) == 1
     got = M.scan_auto(spark, path, ranges={"ts": (lo, hi)})
     assert sorted(r.k for r in got.collect()) == [3, 4, 5]
+
+
+def _dml_table(spark, tmp_path):
+    """(k, g, w) table of 60 rows in 3 files whose column w is physically
+    v: one rename already committed, so staging must map w -> v."""
+    df = spark.range(60).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).alias("g"),
+        (F.col("id") * 2).alias("v"),
+    )
+    path = str(tmp_path / "dml")
+    write_range_sorted(df, path, "k", num_partitions=3)
+    M.manifest_init(path, stat_cols=["k"])
+    M.rename_column(path, "v", "w")
+    return path
+
+
+def _dml_ops(spark):
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 3).alias("g"),
+            (F.col("id") * 2).alias("w"),
+        )
+
+    return {
+        "append": lambda p: M.append(batch(100, 110), p),
+        "delete_where": lambda p: M.delete_where(spark, p, "k < 5"),
+        "update_where": lambda p: M.update_where(
+            spark, p, "k < 5", {"g": "g + 10"}
+        ),
+        "merge_into": lambda p: M.merge_into(spark, p, batch(55, 65), "k"),
+    }
+
+
+@pytest.mark.parametrize("op", ["append", "delete_where", "update_where", "merge_into"])
+def test_dml_reads_the_manifest_once(spark, tmp_path, monkeypatch, op):
+    """Staging takes its column mapping (and append its partition spec)
+    from the operation's snapshot instead of reading the latest manifest
+    again."""
+    path = _dml_table(spark, tmp_path)
+    real_read = M.read_manifest
+    calls = []
+
+    def counting(p, version=None):
+        calls.append(version)
+        return real_read(p, version)
+
+    monkeypatch.setattr(M, "read_manifest", counting)
+    _dml_ops(spark)[op](path)
+    assert len(calls) == 1, calls
+
+
+@pytest.mark.parametrize("op", ["append", "delete_where", "update_where", "merge_into"])
+def test_staging_keeps_the_snapshot_column_mapping(spark, tmp_path, monkeypatch, op):
+    """A second rename (w -> x) committing right after the operation's
+    manifest read must not re-map the rows it stages: they carry the
+    snapshot's logical w, physically v, and must be written as v — under
+    the latest mapping they would be written as w, a column no version
+    maps. The rename then refuses the commit, as any concurrent schema
+    change does."""
+    path = _dml_table(spark, tmp_path)
+    real_read, real_stage = M.read_manifest, M._stage_rewrites
+    fired, staged = [], []
+
+    def read_then_rename(p, version=None):
+        m = real_read(p, version)
+        if not fired:
+            fired.append(m["version"])
+            M.rename_column(p, "w", "x")
+        return m
+
+    def recording(df, p, *args):
+        names = real_stage(df, p, *args)
+        staged.extend(pq.read_schema(os.path.join(p, n)).names for n in names)
+        return names
+
+    monkeypatch.setattr(M, "read_manifest", read_then_rename)
+    monkeypatch.setattr(M, "_stage_rewrites", recording)
+    with pytest.raises(M.CommitConflict):
+        _dml_ops(spark)[op](path)
+    assert fired and staged
+    for names in staged:
+        assert "v" in names and "w" not in names, names
